@@ -223,11 +223,11 @@ def main() -> None:
             "steal_frac_noisy_rows": row_steal,
             "e2e_reps": e2e_reps,
         },
-        # north-rule N -> 4N scaling evidence, measured THIS ROUND with the
-        # fresh-process best-of-3 taskset protocol (not re-measured inside
-        # this one-shot run — a concurrent 2-core/8-core A/B here would
-        # contaminate the battery above; raw runs + steal traces archived
-        # at the cited paths, full protocol in BASELINE.md §3).
+        # north-rule N -> 4N scaling evidence: archived round-5 figures read
+        # from the cited artifacts (fresh-process best-of-3 taskset protocol,
+        # full protocol in BASELINE.md §3), not measured by this run — a
+        # concurrent 2-core/8-core A/B here would contaminate the battery
+        # above.
         "scaling_archived": {
             "parse_pipeline_2v8": {
                 "docs_per_sec_2core": 2466.8,
@@ -235,6 +235,7 @@ def main() -> None:
                 "speedup": 3.41,
                 "efficiency": 0.854,
                 "source": "bench_artifacts/parse_scaling_r5_window4.json",
+                "round": 5,
             },
             "curate_full_stage_2v8": {
                 "wall_sec_2core": 225.02,
@@ -243,6 +244,7 @@ def main() -> None:
                 "efficiency": 0.805,
                 "identical_output": True,
                 "source": "bench_artifacts/curate_scaling_gate_r5.log",
+                "round": 5,
             },
         },
     }

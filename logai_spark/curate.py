@@ -32,7 +32,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import time
 from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -167,24 +166,8 @@ def run_curation(
 ) -> dict:
     """Run the curation pipeline over a documents table
     (id, text, lang, source). Writes ``curated/`` parquet and
-    ``_curation_manifest.json`` under ``output``; returns the manifest.
-
-    ``CURATE_TIMINGS=1`` adds a per-phase wall-clock breakdown to the
-    manifest (and forces the hygiene barrier with an explicit count so its
-    materialization cost is attributed, not folded into the ledger write) —
-    a profiling aid for scaling work, off in production."""
+    ``_curation_manifest.json`` under ``output``; returns the manifest."""
     c = cfg
-    timings: dict[str, float] | None = (
-        {} if os.environ.get("CURATE_TIMINGS") == "1" else None
-    )
-    _t0 = time.time()
-
-    def _tick(name: str) -> None:
-        nonlocal _t0
-        if timings is not None:
-            now = time.time()
-            timings[name] = round(now - _t0, 2)
-            _t0 = now
 
     # ------------------------------------------------------------------
     # 0. optional text-hygiene stages BEFORE dedup (normalizing first makes
@@ -356,15 +339,11 @@ def run_curation(
     # DISK_ONLY, not MEMORY_*: corpus-sized text should never compete
     # with shuffle/execution memory.
     barrier = None
-    _tick("pre_stage_lazy_and_counts")
     if pre_cols or c.url_dedup or c.url_blocklist:
         from pyspark import StorageLevel
 
         docs = docs.persist(StorageLevel.DISK_ONLY)
         barrier = docs
-        if timings is not None:
-            docs.count()
-            _tick("barrier_materialize")
 
     # ------------------------------------------------------------------
     # Flag ledger: one boolean per drop reason on a THIN (id, lang,
@@ -465,7 +444,7 @@ def run_curation(
         try:
             return _finish_curation(
                 spark, docs, flags, pre_cols, output, c, True,
-                pre_counts=pre_counts, timings=timings,
+                pre_counts=pre_counts,
             )
         finally:
             if barrier is not None:
@@ -697,7 +676,6 @@ def run_curation(
     if os.path.exists(meta_path):
         os.remove(meta_path)
     flags.write.mode("overwrite").parquet(ledger_dir)
-    _tick("ledger_build_write")
     base.unpersist()
     with open(meta_path, "w") as fp:
         json.dump({"config_hash": cfg_hash}, fp)
@@ -705,7 +683,7 @@ def run_curation(
     try:
         return _finish_curation(
             spark, docs, flags, pre_cols, output, c, False,
-            pre_counts=pre_counts, timings=timings,
+            pre_counts=pre_counts,
         )
     finally:
         if barrier is not None:
@@ -721,21 +699,11 @@ def _finish_curation(
     c: CurationConfig,
     resumed: bool,
     pre_counts: dict[str, int] | None = None,
-    timings: dict[str, float] | None = None,
 ) -> dict:
     """Stages downstream of the checkpointed ledger: counts, PII scrub,
     packing, (sharded) write, manifest."""
     # column presence (not config) decides: a resumed ledger carries
     # _keep_gopher iff it was written with the stage on
-    _t0 = time.time()
-
-    def _tick(name: str) -> None:
-        nonlocal _t0
-        if timings is not None:
-            now = time.time()
-            timings[name] = round(now - _t0, 2)
-            _t0 = now
-
     has_gopher = "_keep_gopher" in flags.columns
     has_zlib = "_keep_zlib" in flags.columns
     has_decon = "_keep_decon" in flags.columns
@@ -781,7 +749,6 @@ def _finish_curation(
     if "_ss_removed" in pre_cols:
         aggs.append(F.sum("_ss_removed").alias("ss_removed"))
     row = flags.agg(*aggs).collect()[0]
-    _tick("stage_counts_agg")
     counts: dict[str, int] = {}
     if pre_counts:
         counts.update(pre_counts)
@@ -931,7 +898,6 @@ def _finish_curation(
         final.write.mode("overwrite").partitionBy("shard").parquet(out_dir)
     else:
         final.write.mode("overwrite").parquet(out_dir)
-    _tick("pack_and_write")
     # audit the WRITTEN files, not the plan — one job for both counts
     waggs = [
         F.count(F.lit(1)).alias("n"),
@@ -940,7 +906,6 @@ def _finish_curation(
     if c.n_shards:
         waggs.append(F.count_distinct("shard").alias("s"))
     wrow = spark.read.parquet(out_dir).agg(*waggs).collect()[0]
-    _tick("write_audit")
     counts["written"] = wrow["n"]
     counts["packs"] = wrow["p"]
     if c.n_shards:
@@ -951,8 +916,6 @@ def _finish_curation(
         "counts": counts,
         "resumed_from_ledger": resumed,
     }
-    if timings is not None:
-        manifest["timings"] = timings
     with open(os.path.join(output, "_curation_manifest.json"), "w") as fp:
         json.dump(manifest, fp, indent=2, default=str)
     return manifest

@@ -68,10 +68,12 @@ def train_bpe_from_counts(
 
     Classic Sennrich et al. training over word frequencies with incremental
     pair-count maintenance: each merge touches only the words that contain
-    the merged pair. Stops early when no pair reaches ``min_frequency``.
-    Returns merges in learned order — the order IS the rank table encoding
-    uses.
+    the merged pair. Stops early when no pair reaches ``min_frequency``
+    (floored at 1: a pair whose count fell to 0 no longer occurs in the
+    corpus and is never merged). Returns merges in learned order — the
+    order IS the rank table encoding uses.
     """
+    min_frequency = max(1, min_frequency)
     words: dict[str, int] = {}
     for w, n in counts:
         if w and n > 0:

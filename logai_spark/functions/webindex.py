@@ -257,12 +257,18 @@ def positional_index(
     """(token, id, pos) positional postings — the phrase/proximity-query
     complement of :func:`inverted_index` (Lucene's position-augmented
     postings). pos is the 0-based token offset from ``tokenize_expr``
-    order. One zero-shuffle projection+explode; materialize it
+    order. Blank docs yield no postings: the empty token a blank text
+    splits into is dropped after the explode, so positions keep their
+    offsets. One zero-shuffle projection+explode; materialize it
     (sorted/bucketed by token) to serve as a standing index."""
-    return docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(tokenize_expr(text_col)).alias("pos", "token"),
-    ).select("token", "id", "pos")
+    return (
+        docs.select(
+            F.col(id_col).alias("id"),
+            F.posexplode(tokenize_expr(text_col)).alias("pos", "token"),
+        )
+        .filter(F.length("token") > 0)
+        .select("token", "id", "pos")
+    )
 
 
 def phrase_search(

@@ -294,8 +294,7 @@ def checkpoint(
         "n_partitions": int(n_files),
         "wall_sec": round(time.time() - t0, 3),
     }
-    with open(os.path.join(path, MANIFEST), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    write_manifest(path, manifest)
     return out
 
 

@@ -21,13 +21,14 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logai_spark.operators.enrich import enrich
 from logai_spark.operators.features import counter_vector
 from logai_spark.operators.route import hot_key_buckets, route_to_sinks, write_manifest
-from logai_spark.parse.distributed import match_templates, mine_templates
+from logai_spark.parse.distributed import mine_templates
 from logai_spark.parse.drain import DrainConfig, template_id_of
 from logai_spark.sources.webpages import extract_text_udf
 
@@ -46,36 +47,7 @@ LANG_DIM = [
 class PipelineConfig:
     drain: DrainConfig = field(default_factory=DrainConfig)
     window: str = "1 hour"
-    skew_factor: float = 2.0  # keys above this x mean share get salted
     sample_fraction_for_mining: float = 1.0  # at 100TB you mine on a sample
-    # match pass: 'fused' = extract+match in one mapInPandas crossing with a
-    # per-worker memo (fastest measured: one Python crossing, no join
-    # shuffle); 'by_join' = extract, then global distinct-line match +
-    # equi-join (total Python work is |distinct lines| regardless of worker
-    # count); 'auto' = pick per-run from the mining pass's measured
-    # duplication factor (total/distinct lines — free: same pass, in-band
-    # stats rows) AND the session's parallelism.
-    #
-    # The round-3 duplication sweep (BASELINE.md §3.3, tools/
-    # match_crossover_bench.py) REFUTED the round-2 prediction that high
-    # duplication favors by_join: fused won every measured cell (dup 1.8 ->
-    # 2778, end-to-end AND match-only), because the per-worker memo makes
-    # fused's match cost vanish exactly when duplication is high, while
-    # by_join always pays two fact-table shuffles. by_join's real regime
-    # needs the per-worker re-match term (workers x distinct misses) to
-    # outgrow those shuffles — a worker count this single-JVM host cannot
-    # express. 'auto' therefore requires BOTH floors below.
-    match_strategy: str = "fused"
-    # auto picks by_join only when duplication >= auto_dup_threshold AND
-    # defaultParallelism >= auto_workers_floor. The workers floor is 4x the
-    # widest topology measured (32 workers: fused won at every duplication),
-    # i.e. by_join is only auto-selected on real multi-executor clusters
-    # where the measured evidence no longer bounds the re-match term.
-    auto_dup_threshold: float = 20.0
-    auto_workers_floor: int = 128
-    # cross-check the routed parquet row count against the aggregate-derived
-    # manifest totals before writing the manifest (fail loudly on mismatch)
-    verify_write: bool = True
     # WHATWG charset sniff (BOM > meta prescan > utf-8 trial > cp1252) in
     # front of html->text extraction. Off by default: the pinned per-url
     # byte-identity invariant is defined against the utf-8 reference
@@ -100,6 +72,8 @@ def extract_parse(
     once: each Arrow batch of pages is extracted, line-split, and matched in
     the same Python worker; only final line-level rows return to the JVM.
     """
+    import hashlib
+
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -110,12 +84,6 @@ def extract_parse(
     )
 
     extractor = extract_text_sniffed if charset_sniff else extract_text_reference
-
-    import hashlib
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     cfg = config or DrainConfig()
     bc = pages.sparkSession.sparkContext.broadcast((templates, cfg))
     # one output row per PAGE with line/template-id arrays: url/ts/lang cross
@@ -180,14 +148,13 @@ def extract_parse(
     )
 
 
-def pages_to_lines(pages: DataFrame, use_stored_text: bool = False) -> DataFrame:
+def pages_to_lines(pages: DataFrame) -> DataFrame:
     """Stages 1+2: html -> text (Arrow UDF) -> one row per text line.
 
-    ``use_stored_text`` skips re-extraction when the text column is trusted
-    (e.g. pre-extracted upstream); default re-derives it from html so the
-    byte-identity invariant is exercised in the hot path.
+    The text is re-derived from html, so the byte-identity invariant is
+    exercised in the mining pass too.
     """
-    text = F.col("text") if use_stored_text else extract_text_udf()(F.col("html"))
+    text = extract_text_udf()(F.col("html"))
     lines = pages.select(
         "url",
         "warc_ts",
@@ -249,17 +216,11 @@ def run_pipeline(
     pages: DataFrame,
     out_dir: str,
     config: PipelineConfig | None = None,
-    write_sinks: bool = True,
 ) -> dict:
     """Run the full flow; returns metrics {docs, lines, templates, manifest,
     agg_rows}. All counts come from the pipeline's own outputs so callers can
     check them against an oracle run."""
-    import time as _time
-
     cfg = config or PipelineConfig()
-    timings: dict[str, float] = {}
-
-    t0 = _time.perf_counter()
     mine_pages = pages
     if cfg.sample_fraction_for_mining < 1.0:
         # deterministic PAGE-level sample (hash the url, not rand()): the
@@ -274,76 +235,38 @@ def run_pipeline(
     templates, mine_stats = mine_templates(
         pages_to_lines(mine_pages), "logline", cfg.drain, return_stats=True
     )
-    timings["mine"] = round(_time.perf_counter() - t0, 2)
-    strategy = cfg.match_strategy
-    if strategy == "auto":
-        # duplication measured on the mining input (the sample, when
-        # sampling — an under-estimate of true duplication, so auto errs
-        # toward fused, the measured-everywhere winner; see the config
-        # comment and BASELINE.md §3.3 for the refuted-crossover evidence).
-        workers = spark.sparkContext.defaultParallelism
-        strategy = (
-            "by_join"
-            if (
-                mine_stats["duplication"] >= cfg.auto_dup_threshold
-                and workers >= cfg.auto_workers_floor
-            )
-            else "fused"
-        )
-    if strategy == "by_join":
-        from logai_spark.parse.distributed import match_templates_by_join
-
-        parsed = match_templates_by_join(
-            pages_to_lines(pages), "logline", templates, cfg.drain
-        )
-    else:
-        parsed = extract_parse(
-            pages, templates, cfg.drain, charset_sniff=cfg.charset_sniff
-        )
-
+    # one Python crossing for extract+match: the fused path won every
+    # measured duplication and worker count (BASELINE.md §3.3)
+    parsed = extract_parse(pages, templates, cfg.drain, charset_sniff=cfg.charset_sniff)
     enriched = enrich(parsed, lang_dimension(spark), "lang", select=["lang_name", "script"])
 
     metrics: dict = {
         "templates": len(templates),
         "templates_list": templates,
-        "match_strategy": strategy,
         "duplication": round(mine_stats["duplication"], 2),
     }
-    if write_sinks:
-        # The parsed+enriched line table is consumed twice (routed write +
-        # windowed aggregate). Persisting it means the expensive fused
-        # extract+match python stage runs ONCE; the aggregate then reads
-        # executor-local cached blocks (memory, spilling to executor disk)
-        # instead of re-scanning the routed files from shared storage —
-        # one less full-table IO round trip, and no driver-side file
-        # listing of N sink directories.
-        from pyspark import StorageLevel
-
-        enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
-        # skew handling: template sizes from the mining pass tell us which
-        # sinks are hot; only those get salted across writer tasks
-        sizes = {template_id_of(t): s for t, s in templates}
-        hot = hot_key_buckets(
-            sizes,
-            parallelism=spark.sparkContext.defaultParallelism,
-            skew_factor=cfg.skew_factor,
-        )
-        routed_path = os.path.join(out_dir, "routed")
-        t0 = _time.perf_counter()
-        manifest = route_to_sinks(
-            enriched,
-            routed_path,
-            "template_id",
-            hot_buckets=hot,
-            stage="route",
-            extra_meta={"hot_sinks": len(hot)},
-            compute_counts=False,
-        )
-        timings["route_write"] = round(_time.perf_counter() - t0, 2)
-        agg_src = enriched
-    else:
-        agg_src = enriched.persist()
-        manifest = {"stage": "route", "path": None}
+    # The parsed+enriched line table is consumed twice (routed write +
+    # windowed aggregate). Persisting it means the expensive fused
+    # extract+match python stage runs ONCE; the aggregate then reads
+    # executor-local cached blocks (memory, spilling to executor disk)
+    # instead of re-scanning the routed files from shared storage —
+    # one less full-table IO round trip, and no driver-side file
+    # listing of N sink directories.
+    enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
+    # skew handling: template sizes from the mining pass tell us which
+    # sinks are hot; only those get salted across writer tasks
+    sizes = {template_id_of(t): s for t, s in templates}
+    hot = hot_key_buckets(sizes, parallelism=spark.sparkContext.defaultParallelism)
+    routed_path = os.path.join(out_dir, "routed")
+    manifest = route_to_sinks(
+        enriched,
+        routed_path,
+        "template_id",
+        hot_buckets=hot,
+        stage="route",
+        extra_meta={"hot_sinks": len(hot)},
+        compute_counts=False,
+    )
 
     # windowed aggregate from the persisted line table; per-sink manifest
     # counts roll up from the aggregate instead of a second full scan.
@@ -353,8 +276,7 @@ def run_pipeline(
     # (10^7+ rows at fine windows over a long corpus) while #sinks is the
     # bounded routing fan-out. The rollup is executor-side partial-agg over
     # the persisted agg blocks; the driver only ever sees #sinks rows.
-    t0 = _time.perf_counter()
-    agg = counter_vector(agg_src, ["template_id", "lang"], "warc_ts", cfg.window).persist()
+    agg = counter_vector(enriched, ["template_id", "lang"], "warc_ts", cfg.window).persist()
     agg.write.mode("overwrite").parquet(os.path.join(out_dir, "agg"))
     per_sink = (
         agg.groupBy("template_id")
@@ -370,14 +292,8 @@ def run_pipeline(
     manifest["total_rows"] = int(sum(sink_counts.values()))
     manifest["n_sinks"] = len(sink_counts)
     metrics["agg_rows"] = int(sum(r["_agg_rows"] for r in per_sink))
-    timings["aggregate"] = round(_time.perf_counter() - t0, 2)
-    metrics["timings"] = timings
-    if write_sinks:
-        if cfg.verify_write:
-            t0 = _time.perf_counter()
-            verify_routed_write(spark, routed_path, manifest["total_rows"])
-            timings["verify_write"] = round(_time.perf_counter() - t0, 2)
-        write_manifest(os.path.join(out_dir, "routed"), manifest)
+    verify_routed_write(spark, routed_path, manifest["total_rows"])
+    write_manifest(routed_path, manifest)
     enriched.unpersist()
     metrics["manifest"] = manifest
     metrics["lines"] = manifest["total_rows"]

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -47,7 +46,6 @@ def run_webgraph_job(
     """Write edges/, domains/ (pagerank + harmonic), anchors/ under
     ``output`` plus _webgraph_manifest.json; returns the manifest dict.
     ``html_col`` may be binary (cast to utf-8 string) or string."""
-    t0 = time.perf_counter()
     src = pages.select(
         F.regexp_extract(F.col(url_col), DOMAIN_RE, 1).alias("source"),
         F.col(html_col).cast("string").alias("html"),
@@ -58,7 +56,6 @@ def run_webgraph_job(
         "overwrite"
     ).parquet(edges_path)
     edges = spark.read.parquet(edges_path)
-    t_edges = time.perf_counter()
 
     pr = domain_pagerank(edges, iters=pr_iters)
     hb = hyperball_harmonic(edges, p=hb_p, iters=hb_iters)
@@ -68,13 +65,11 @@ def run_webgraph_job(
         F.coalesce("rank", F.lit(0.0)).alias("pagerank"),
         F.coalesce("harmonic", F.lit(0.0)).alias("harmonic"),
     ).write.mode("overwrite").parquet(domains_path)
-    t_ranks = time.perf_counter()
 
     anchors_path = os.path.join(output, "anchors")
     anchor_text(src, html_col="html", top_k=top_anchors).write.mode(
         "overwrite"
     ).parquet(anchors_path)
-    t_anchors = time.perf_counter()
 
     manifest = {
         "n_edges": spark.read.parquet(edges_path).count(),
@@ -83,11 +78,6 @@ def run_webgraph_job(
         "pr_iters": pr_iters,
         "hb_iters": hb_iters,
         "hb_p": hb_p,
-        "timings": {
-            "edges": round(t_edges - t0, 2),
-            "ranks": round(t_ranks - t_edges, 2),
-            "anchors": round(t_anchors - t_ranks, 2),
-        },
     }
     with open(os.path.join(output, "_webgraph_manifest.json"), "w") as fp:
         json.dump(manifest, fp, indent=1)

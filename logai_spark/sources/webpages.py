@@ -66,8 +66,9 @@ def _gen_line(seed: int, doc: int, i: int, line_pool: int | None = None) -> str:
     r = _h(seed, f"line:{doc}:{i}")
     if line_pool is not None:
         # high-duplication regime: draw the line from a fixed pool of
-        # `line_pool` distinct lines (duplication factor ~= total/pool),
-        # for the fused-vs-by_join crossover bench (BASELINE.md §3.3)
+        # `line_pool` distinct lines (duplication factor ~= total/pool):
+        # the corpus on which the fused match's memo hits, used by the
+        # fused-vs-join match-equivalence test
         r = _h(seed, f"pline:{r % line_pool}")
     # skew: ~35% of lines hit template 0, rest uniform
     t = 0 if r % 100 < 35 else 1 + (r >> 8) % (len(_LINE_TEMPLATES) - 1)

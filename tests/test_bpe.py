@@ -46,6 +46,18 @@ def test_min_frequency_stops_training():
     assert merges == [("a", "b" + EOW)]
 
 
+def test_min_frequency_zero_never_merges_a_dead_pair():
+    # merging (a,b) in "abc" leaves (b,c</w>) at count 0; with the floor at
+    # 0 that dead pair must not be learned once the live pairs run out
+    merges = train_bpe_from_counts([("abc", 3)], num_merges=10, min_frequency=0)
+    seg = ["a", "b", "c" + EOW]
+    for a, b in merges:
+        i = next((i for i in range(len(seg) - 1) if seg[i : i + 2] == [a, b]), None)
+        assert i is not None, f"merge {(a, b)} does not occur in the corpus"
+        seg[i : i + 2] = [a + b]
+    assert merges == [("a", "b"), ("ab", "c" + EOW)]
+
+
 def test_encode_applies_lowest_rank_first():
     # ranks force (b,c</w>) before (a,b) even though (a,b) is leftmost
     ranks = {("b", "c" + EOW): 0, ("a", "b"): 1, ("a", "bc" + EOW): 2}

@@ -109,66 +109,28 @@ def test_windowed_aggregate_equality(spark, pipeline_out, oracle):
     )
 
 
-def test_match_strategy_equivalence(spark, tmp_path):
-    """'fused' (per-worker memo match) and 'by_join' (global distinct-line
-    match + equi-join) must produce identical routed rows — they are two
-    physical plans for the same logical match pass."""
-    from pyspark.sql import functions as F
+def test_fused_match_equals_join_match(spark):
+    """The fused extract+match stage (per-worker memo) and the join-based
+    match (global distinct-line match + equi-join, the drain_parse oracle's
+    plan) give identical (url, seq, logline, template_id) rows, on a
+    mostly-distinct corpus and on a 40-line pool, the high-duplication
+    corpus where the memo hits."""
+    from logai_spark.parse.distributed import match_templates_by_join, mine_templates
+    from logai_spark.pipeline import extract_parse, pages_to_lines
 
-    from logai_spark.pipeline import PipelineConfig, run_pipeline
-    from logai_spark.sources.webpages import synth_webpages
-
-    pages = synth_webpages(spark, 300)
-    m1 = run_pipeline(
-        spark, pages, str(tmp_path / "fused"),
-        PipelineConfig(match_strategy="fused"),
-    )
-    m2 = run_pipeline(
-        spark, pages, str(tmp_path / "by_join"),
-        PipelineConfig(match_strategy="by_join"),
-    )
-    assert m1["lines"] == m2["lines"]
-    assert m1["manifest"]["sinks"] == m2["manifest"]["sinks"]
-    a = spark.read.parquet(str(tmp_path / "fused" / "routed")).select(
-        "url", "seq", "logline", "template_id"
-    )
-    b = spark.read.parquet(str(tmp_path / "by_join" / "routed")).select(
-        "url", "seq", "logline", "template_id"
-    )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_match_strategy_auto_selection(spark, tmp_path):
-    """'auto' needs BOTH floors (measured duplication AND worker count —
-    the round-3 sweep showed fused winning at every duplication on narrow
-    topologies, BASELINE.md §3.3): at the default workers floor this host
-    always picks fused; with the floor lowered to this session's
-    parallelism, a high-duplication corpus flips to by_join."""
-    from logai_spark.pipeline import PipelineConfig, run_pipeline
-    from logai_spark.sources.webpages import synth_webpages
-
-    cfg = PipelineConfig(match_strategy="auto", auto_dup_threshold=20.0)
-    low = run_pipeline(
-        spark, synth_webpages(spark, 300), str(tmp_path / "low"), cfg
-    )
-    assert low["match_strategy"] == "fused"
-    assert low["duplication"] < 20.0
-    # ~6300 lines drawn from a 40-line pool -> duplication far above the
-    # threshold, but the topology floor keeps fused on this host
-    high_pages = synth_webpages(spark, 300, line_pool=40)
-    high = run_pipeline(spark, high_pages, str(tmp_path / "high"), cfg)
-    assert high["match_strategy"] == "fused"
-    assert high["duplication"] > 20.0
-    # cluster-topology regime (floor at this session's parallelism):
-    # high duplication now selects by_join
-    cfg_wide = PipelineConfig(
-        match_strategy="auto", auto_dup_threshold=20.0,
-        auto_workers_floor=spark.sparkContext.defaultParallelism,
-    )
-    wide = run_pipeline(spark, high_pages, str(tmp_path / "wide"), cfg_wide)
-    assert wide["match_strategy"] == "by_join"
-    # the stats are exact, not sampled: totals agree across strategies
-    assert wide["lines"] == high["lines"] > 0 and low["lines"] > 0
+    cols = ["url", "seq", "logline", "template_id"]
+    for line_pool in (None, 40):
+        pages = synth_webpages(spark, 300, line_pool=line_pool)
+        templates, stats = mine_templates(pages_to_lines(pages), return_stats=True)
+        # the pooled corpus repeats each line ~150x, so the memo mostly hits
+        assert (stats["duplication"] > 20.0) == (line_pool is not None)
+        fused = extract_parse(pages, templates).select(*cols)
+        joined = match_templates_by_join(
+            pages_to_lines(pages), "logline", templates
+        ).select(*cols)
+        assert fused.count() == joined.count() > 0, line_pool
+        assert fused.exceptAll(joined).count() == 0, line_pool
+        assert joined.exceptAll(fused).count() == 0, line_pool
 
 
 def test_mine_stats_duplication(spark):

@@ -137,6 +137,18 @@ def test_phrase_search_basic_and_overlap(spark):
     assert {r.doc_id for r in phrase_search(df, "QUICK Brown").collect()} == {1, 2}
 
 
+def test_positional_index_skips_blank_docs(spark):
+    """Blank and whitespace-only docs yield no postings (no '' token), and
+    runs of spaces do not shift the surviving positions."""
+    from logai_spark.functions.webindex import positional_index
+
+    df = spark.createDataFrame(
+        [(1, ""), (2, "a  b"), (3, "   ")], "doc_id long, text string"
+    )
+    got = sorted(tuple(r) for r in positional_index(df).collect())
+    assert got == [("a", 2, 0), ("b", 2, 1)]
+
+
 def test_phrase_search_repeated_terms(spark):
     """A phrase with a duplicated token must require BOTH offsets at the
     same start — 'a b a' matches 'a b a' but not 'a b c' or 'b a b'."""

@@ -57,7 +57,6 @@ def main() -> None:
                 "lines": metrics["lines"],
                 "templates": metrics["templates"],
                 "n_sinks": metrics["manifest"]["n_sinks"],
-                "timings": metrics["timings"],
                 "executors": spark.sparkContext.getConf().get(
                     "spark.executor.instances", "dynamic"
                 ),

@@ -97,7 +97,6 @@ def run_at(cpus: int, n_docs: int) -> dict:
         "docs_per_sec": round(n_docs / wall, 1),
         "steal_frac": round((s1 - s0) / max(t1c - t0c, 1), 4),
         "counts": manifest["counts"],
-        **({"timings": manifest["timings"]} if "timings" in manifest else {}),
     }
 
 

@@ -77,7 +77,6 @@ def run_at(cpus: int, n_docs: int, mine_sample: float = 0.1) -> dict:
         "docs_per_sec": round(n_docs / wall, 1),
         "lines": metrics["lines"],
         "templates": metrics["templates"],
-        "timings": metrics.get("timings", {}),
     }
 
 

@@ -1,10 +1,10 @@
 """Standing scaling-regression gate for the FULL-stage curation pipeline.
 
-One command produces the 2-vs-8-core A/B plus the per-stage timing table and
-FAILS (exit 1) if the north-rule criterion regresses: full-stage 2->8
-scaling efficiency must stay >= the threshold (default 0.8 — the value the
-session-9 regression hunt restored, BASELINE.md §3.19) and the two levels
-must produce byte-identical outputs. Run it at commit time so the §3.19
+One command produces the 2-vs-8-core A/B and FAILS (exit 1) if the
+north-rule criterion regresses: full-stage 2->8 scaling efficiency must stay
+>= the threshold (default 0.8 — the value the session-9 regression hunt
+restored, BASELINE.md §3.19) and the two levels must produce byte-identical
+outputs. Run it at commit time so the §3.19
 class of regression (corpus text crossing an exchange in a rewrite stage)
 is caught when it lands, not by a round-end hunt.
 
@@ -15,7 +15,8 @@ Run:  python tools/scaling_gate.py [n_docs] [threshold] [repeats]
       pipeline (BASELINE.md §3.25 scale floor)
 
 Per-stage attribution for a failure: tools/stage_scaling.py isolates one
-rewrite stage per fresh JVM (see its docstring).
+rewrite stage per fresh JVM (see its docstring); per-layer task metrics
+come from ``python3 perfbench/run.py --workload corpus --trace 1``.
 """
 
 from __future__ import annotations
@@ -46,14 +47,6 @@ def main() -> None:
     print(f"  2-core wall {low['wall_sec']:.2f}s   8-core wall {high['wall_sec']:.2f}s")
     print(f"  speedup {speedup:.2f}x   efficiency {eff:.3f}   (gate >= {threshold})")
     print(f"  identical output across sizes: {same}")
-    t_low = low.get("timings") or {}
-    t_high = high.get("timings") or {}
-    if t_low and t_high:
-        print(f"  {'stage':<24}{'2c sec':>9}{'8c sec':>9}{'ratio':>7}")
-        for k in t_low:
-            a, b = t_low[k], t_high.get(k, float("nan"))
-            ratio = a / b if b else float("nan")
-            print(f"  {k:<24}{a:>9.2f}{b:>9.2f}{ratio:>7.2f}")
     print(json.dumps({
         "n_docs": n_docs,
         "efficiency": round(eff, 3),
