@@ -43,6 +43,10 @@ from logai_spark.functions.textops import (
     repetition_stats,
 )
 from logai_spark.operators.features import pack_sequences
+from logai_spark.operators.route import manifest_of, write_manifest
+
+# the ledger's commit record: the config hash a resume must match
+LEDGER_META = "_ledger_meta.json"
 
 
 @dataclass(frozen=True)
@@ -364,7 +368,7 @@ def run_curation(
     # only ids/flags are); it is deterministic, so the output is identical.
     # ------------------------------------------------------------------
     ledger_dir = os.path.join(output, "_ledger")
-    meta_path = os.path.join(output, "_ledger_meta.json")
+    meta_path = os.path.join(output, LEDGER_META)
     stage_cfg = {
         k: v for k, v in asdict(c).items()
         if k not in (
@@ -420,13 +424,9 @@ def run_curation(
         ).encode()
     ).hexdigest()
     resumed = False
-    if (
-        c.resume
-        and os.path.exists(os.path.join(ledger_dir, "_SUCCESS"))
-        and os.path.exists(meta_path)
-    ):
-        with open(meta_path) as fp:
-            resumed = json.load(fp).get("config_hash") == cfg_hash
+    if c.resume and os.path.exists(os.path.join(ledger_dir, "_SUCCESS")):
+        meta = manifest_of(output, LEDGER_META)
+        resumed = meta is not None and meta.get("config_hash") == cfg_hash
     if resumed:
         flags = spark.read.parquet(ledger_dir)
         pre_cols = [
@@ -677,8 +677,7 @@ def run_curation(
         os.remove(meta_path)
     flags.write.mode("overwrite").parquet(ledger_dir)
     base.unpersist()
-    with open(meta_path, "w") as fp:
-        json.dump({"config_hash": cfg_hash}, fp)
+    write_manifest(output, {"config_hash": cfg_hash}, LEDGER_META)
     flags = spark.read.parquet(ledger_dir)
     try:
         return _finish_curation(
@@ -916,6 +915,5 @@ def _finish_curation(
         "counts": counts,
         "resumed_from_ledger": resumed,
     }
-    with open(os.path.join(output, "_curation_manifest.json"), "w") as fp:
-        json.dump(manifest, fp, indent=2, default=str)
+    write_manifest(output, manifest, "_curation_manifest.json")
     return manifest

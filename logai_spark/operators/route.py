@@ -16,13 +16,15 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_lineage_manifest.json"
 LINEAGE_DIR = "_lineage_files"  # parquet sidecar: per-FILE lineage rows
+# the directory Spark writes null partition values to: the one key of the
+# null (dead-letter) sink in manifests, lineage and compaction plans alike
+NULL_SINK = "__HIVE_DEFAULT_PARTITION__"
 
 
 def file_lineage(spark: SparkSession, path: str) -> DataFrame:
@@ -170,19 +172,14 @@ def route_to_sinks(
     partition_col: str = "template_id",
     mode: str = "overwrite",
     hot_buckets: dict[str, int] | None = None,
-    stage: str = "route",
-    extra_meta: dict | None = None,
-    compute_counts: bool = True,
-) -> dict:
-    """Write the routed table partitioned by ``partition_col``; return (and
-    persist) the manifest: per-sink row counts + stage metrics.
+) -> None:
+    """Write the routed table partitioned by ``partition_col``. The caller
+    commits it with :func:`commit_lineage` (per-sink counts from the written
+    footers, checked against its own expected counts when it has them).
 
     ``hot_buckets`` (from :func:`hot_key_buckets`) salts only known-skewed
     keys so cold sinks get exactly one file while hot sinks parallelize.
-    The per-sink counts are the 'aggregate counts per sink' the north_rule
-    checks against the reference, and they double as resume lineage.
     """
-    t0 = time.time()
     (
         skew_aware_repartition(df, partition_col, hot_buckets)
         # sort within each task so the partitionBy writer keeps ONE open file
@@ -193,51 +190,90 @@ def route_to_sinks(
         .partitionBy(partition_col)
         .parquet(path)
     )
-    manifest = {
-        "stage": stage,
-        "path": path,
-        "partition_col": partition_col,
-        "wall_sec": round(time.time() - t0, 3),
-        **(extra_meta or {}),
+
+
+def write_lineage(
+    spark: SparkSession,
+    data_path: str,
+    partition_col: str | None,
+    lineage_path: str,
+) -> dict:
+    """The lineage pass: per-FILE row counts from the parquet footers of
+    ``data_path`` (:func:`footer_lineage_scan`, no row scan) land in the
+    parquet sidecar at ``lineage_path`` without touching the driver; only
+    the per-key totals, O(#sinks), are collected. Returns {sink key: rows},
+    keyed as the layout spells them (:data:`NULL_SINK` for the null key), or
+    {None: rows} for an unpartitioned layout."""
+    (
+        footer_lineage_scan(spark, data_path, partition_col)
+        .write.mode("overwrite")
+        .parquet(lineage_path)
+    )
+    keys = [partition_col] if partition_col else []
+    return {
+        (str(r[partition_col]) if partition_col else None): int(r["n"] or 0)
+        for r in spark.read.parquet(lineage_path)
+        .groupBy(*keys)
+        .agg(F.sum("n_rows").alias("n"))
+        .collect()
     }
-    if compute_counts:
-        # derive per-sink counts from the WRITTEN data's parquet footers
-        # (footer_lineage_scan — file-count-proportional, no row scan):
-        # avoids recomputing the upstream plan and verifies what landed.
-        # Callers that aggregate the routed table anyway should pass
-        # compute_counts=False and fill the manifest via write_manifest with
-        # counts rolled up from their aggregate.
-        spark = df.sparkSession
-        # per-FILE counts (file == writer task -> per-partition lineage)
-        # land in the parquet sidecar WITHOUT ever touching the driver;
-        # per-sink totals (the north_rule's per-sink aggregate equality,
-        # O(#templates)) are the only rows collected into the JSON manifest.
-        (
-            footer_lineage_scan(spark, path, partition_col)
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, LINEAGE_DIR))
-        )
-        counts = {
-            str(r[partition_col]): int(r["n"])
-            for r in file_lineage(spark, path)
-            .groupBy(partition_col)
-            .agg(F.sum("n_rows").alias("n"))
-            .collect()
+
+
+def commit_lineage(
+    spark: SparkSession,
+    path: str,
+    stage: str,
+    partition_col: str | None = None,
+    expected: dict | None = None,
+) -> dict:
+    """Commit a written output: run the lineage pass over ``path``, check
+    it against ``expected`` per-sink counts when given (raw keys — a None
+    key is the null sink), then write the manifest atomically and return
+    it. A partial or faulty write fails HERE, before any manifest
+    certifies it."""
+    counts = write_lineage(spark, path, partition_col, os.path.join(path, LINEAGE_DIR))
+    if expected is not None:
+        want = {
+            NULL_SINK if k is None else str(k): int(n) for k, n in expected.items()
         }
-        manifest["sinks"] = counts
-        manifest["total_rows"] = int(sum(counts.values()))
-        manifest["n_sinks"] = len(counts)
+        bad = {
+            k: (want.get(k), counts.get(k))
+            for k in sorted(want.keys() | counts.keys())
+            if want.get(k) != counts.get(k)
+        }
+        if bad:
+            raise RuntimeError(
+                f"routed write inconsistent at {path}: sink -> "
+                f"(expected, written) {bad}"
+            )
+    manifest = {"stage": stage, "path": path, "total_rows": sum(counts.values())}
+    if partition_col:
+        manifest.update(partition_col=partition_col, sinks=counts, n_sinks=len(counts))
     write_manifest(path, manifest)
     return manifest
 
 
-def write_manifest(path: str, manifest: dict) -> None:
-    with open(os.path.join(path, MANIFEST), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+def _write_atomic(target: str, payload: str) -> None:
+    tmp = target + ".tmp"
+    with open(tmp, "w") as fp:
+        fp.write(payload)
+        fp.flush()
+        os.fsync(fp.fileno())
+    os.replace(tmp, target)  # atomic on POSIX — the commit point
 
 
-def manifest_of(path: str) -> dict | None:
-    p = os.path.join(path, MANIFEST)
+def write_manifest(path: str, manifest: dict, name: str = MANIFEST) -> None:
+    """The one manifest writer: serialize first (an unencodable manifest
+    raises before any byte lands), then replace ``path/name`` atomically,
+    so a reader sees the previous manifest or the new one, never a torn
+    file."""
+    payload = json.dumps(manifest, indent=1, sort_keys=True)
+    _write_atomic(os.path.join(path, name), payload)
+
+
+def manifest_of(path: str, name: str = MANIFEST) -> dict | None:
+    """The one manifest reader: ``path/name`` parsed, or None if absent."""
+    p = os.path.join(path, name)
     if os.path.exists(p):
         with open(p) as f:
             return json.load(f)
@@ -261,41 +297,20 @@ def checkpoint(
     Spark analog of the reference's write-CSV-then-reload-if-present stages
     (openset_anomaly_detection_workflow.py:260-321).
 
-    PER-PARTITION lineage (north_rule): one row per written file (file ==
-    writer task/partition) with its row count, written to the
-    ``_lineage_files`` parquet sidecar (see :func:`file_lineage`) so a
+    PER-PARTITION lineage (north_rule): :func:`commit_lineage` writes one
+    row per written file (file == writer task/partition) with its row count
+    to the ``_lineage_files`` parquet sidecar (see :func:`file_lineage`) so a
     resume can verify the checkpoint is complete and an auditor can trace
     every output row to the task that wrote it; the JSON manifest keeps the
-    scalar totals, staying bounded at any file count. The per-file counts
-    come from one footer-cheap scan of the freshly written columnar files.
+    scalar totals, staying bounded at any file count.
     """
     spark = df.sparkSession
     m = manifest_of(path)
     if resume and m is not None and m.get("stage") == stage:
         return spark.read.parquet(path)
-    t0 = time.time()
     df.write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
-    # per-file lineage goes to the parquet sidecar (no driver collect —
-    # bounded manifest at any file count); the JSON keeps the two scalars a
-    # resume check needs. Footer metadata only — no row scan.
-    (
-        footer_lineage_scan(spark, path)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, LINEAGE_DIR))
-    )
-    total_rows, n_files = file_lineage(spark, path).agg(
-        F.sum("n_rows"), F.count(F.lit(1))
-    ).collect()[0]
-    manifest = {
-        "stage": stage,
-        "path": path,
-        "total_rows": int(total_rows or 0),
-        "n_partitions": int(n_files),
-        "wall_sec": round(time.time() - t0, 3),
-    }
-    write_manifest(path, manifest)
-    return out
+    commit_lineage(spark, path, stage)
+    return spark.read.parquet(path)
 
 
 def sink_file_stats(path: str, partition_col: str = "template_id") -> dict[str, dict]:
@@ -396,22 +411,27 @@ def compact_sinks(
     tmp = os.path.join(path, "_compact_tmp")
     shutil.rmtree(tmp, ignore_errors=True)  # leftover from a crashed run
 
-    targets = spark.createDataFrame(
-        [(k, n) for k, n in sorted(plan.items())], [partition_col, "_n_buckets"]
+    # plan keys are the layout's spelling, so the null sink is NULL_SINK:
+    # no isin or equi-join on the raw (null) column could match it
+    targets = spark.createDataFrame(sorted(plan.items()), ["_key", "_n_buckets"])
+    src = (
+        spark.read.parquet(path)
+        .withColumn(
+            "_key",
+            F.coalesce(F.col(partition_col).cast("string"), F.lit(NULL_SINK)),
+        )
+        .filter(F.col("_key").isin(list(plan)))
     )
-    src = spark.read.parquet(path).filter(
-        F.col(partition_col).cast("string").isin(list(plan))
-    )
-    data_cols = [c for c in src.columns if c != partition_col]
+    data_cols = [c for c in src.columns if c not in (partition_col, "_key")]
     bucketed = (
-        src.join(F.broadcast(targets), partition_col)
+        src.join(F.broadcast(targets), "_key")
         .withColumn(
             "_bucket",
             F.pmod(F.xxhash64(*[F.col(c) for c in data_cols]), F.col("_n_buckets")),
         )
         .repartition(F.col(partition_col), F.col("_bucket"))
         .sortWithinPartitions(partition_col)
-        .drop("_n_buckets", "_bucket")
+        .drop("_key", "_n_buckets", "_bucket")
     )
     # target size is enforced by maxRecordsPerFile (deterministic splitting
     # inside each writer task, AQE-coalesce-proof); the bucket repartition
@@ -440,24 +460,13 @@ def compact_sinks(
     )
 
     # verify BEFORE swapping: per-sink rows in tmp == per-sink rows on disk.
-    # One footer-metadata pass over tmp yields both the per-sink totals for
-    # the gate (the only rows collected — O(#sinks)) and the per-file
-    # lineage, which goes to a staging parquet sidecar (same file basenames
-    # post-swap — only the directories rename), never to the driver.
+    # The lineage pass over tmp yields both the per-sink totals for the gate
+    # and the per-file lineage, staged as a parquet sidecar (same file
+    # basenames post-swap — only the directories rename).
     tmp_lineage_path = os.path.join(path, "_compact_tmp_lineage")
     shutil.rmtree(tmp_lineage_path, ignore_errors=True)
-    (
-        footer_lineage_scan(spark, tmp, partition_col)
-        .write.mode("overwrite")
-        .parquet(tmp_lineage_path)
-    )
+    new_counts = write_lineage(spark, tmp, partition_col, tmp_lineage_path)
     new_lineage = spark.read.parquet(tmp_lineage_path)
-    new_counts = {
-        str(r[partition_col]): int(r["n"])
-        for r in new_lineage.groupBy(partition_col)
-        .agg(F.sum("n_rows").alias("n"))
-        .collect()
-    }
     for key in plan:
         before = old_counts.get(key)
         if before is not None and int(before) != new_counts.get(key, -1):

@@ -49,8 +49,7 @@ def mine_templates(
     With ``return_stats=True`` also returns {"total_lines", "distinct_lines",
     "duplication"} measured by the SAME pass (each shard emits its
     distinct-line count as a null-template row — no extra action, no extra
-    scan). The duplication factor drives match-strategy auto-selection in
-    ``pipeline.run_pipeline``.
+    scan). ``pipeline.run_pipeline`` reports it as ``metrics["duplication"]``.
     """
     cfg = config or DrainConfig()
 
@@ -67,8 +66,7 @@ def mine_templates(
         # in-band stats row (template NULL): this shard's distinct-line
         # count, over the SAME rows the tree fit (str only) — counting
         # null/non-string rows here while total_lines excludes them would
-        # understate the duplication factor that drives match-strategy auto-
-        # selection
+        # understate the reported duplication factor
         n_fit = int(sum(1 for line in pdf[column] if isinstance(line, str)))
         return pd.DataFrame(
             {
@@ -215,8 +213,6 @@ def match_templates(
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast((templates, cfg))
 
-    import hashlib
-
     @F.pandas_udf(T.StringType())
     def _match_id(series: pd.Series) -> pd.Series:
         # build the matcher once per python worker, not per Arrow batch;
@@ -234,11 +230,7 @@ def match_templates(
             hit = cache.get(line)
             if hit is None and line not in cache:
                 t = tree.match_line(line)
-                hit = (
-                    hashlib.md5(t.encode("utf-8")).hexdigest()[:16]
-                    if t is not None
-                    else None
-                )
+                hit = template_id_of(t) if t is not None else None
                 cache[line] = hit
             return hit
 

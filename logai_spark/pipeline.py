@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from logai_spark.operators.enrich import enrich
 from logai_spark.operators.features import counter_vector
-from logai_spark.operators.route import hot_key_buckets, route_to_sinks, write_manifest
+from logai_spark.operators.route import commit_lineage, hot_key_buckets, route_to_sinks
 from logai_spark.parse.distributed import mine_templates
 from logai_spark.parse.drain import DrainConfig, template_id_of
 from logai_spark.sources.webpages import extract_text_udf
@@ -72,8 +72,6 @@ def extract_parse(
     once: each Arrow batch of pages is extracted, line-split, and matched in
     the same Python worker; only final line-level rows return to the JVM.
     """
-    import hashlib
-
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -107,11 +105,7 @@ def extract_parse(
             hit = memo.get(line)
             if hit is None and line not in memo:
                 t = tree.match_line(line)
-                hit = (
-                    hashlib.md5(t.encode("utf-8")).hexdigest()[:16]
-                    if t is not None
-                    else None
-                )
+                hit = template_id_of(t) if t is not None else None
                 memo[line] = hit
             return hit
 
@@ -171,44 +165,18 @@ def lang_dimension(spark: SparkSession) -> DataFrame:
 def verify_routed_write(
     spark: SparkSession,
     routed_path: str,
-    expected_rows: int,
+    expected: dict,
     partition_col: str = "template_id",
-) -> int:
-    """Write-audit gate: the manifest totals roll up from the in-memory
-    aggregate — confirm the parquet actually written agrees before the
-    manifest lands. A partial or faulty sink write must fail HERE, not get
-    certified by its own manifest. Returns the written row count.
+) -> dict:
+    """Write-audit gate: the expected per-sink counts roll up from the
+    in-memory aggregate — confirm the parquet actually written agrees, sink
+    by sink, before the manifest lands. A partial or faulty sink write must
+    fail HERE, not get certified by its own manifest. Returns the manifest.
 
-    The same pass emits the per-FILE lineage sidecar (route.file_lineage):
-    row counts come from the written files' parquet FOOTERS
-    (route.footer_lineage_scan) — file-count-proportional metadata reads,
-    never a row scan (the previous empty-schema groupBy(input_file_name())
-    iterated every routed row and cost ~3 s of FIXED wall per run at 6.45M
-    rows, the single biggest non-scaling term in the 2-vs-8-core
-    efficiency measurement). The lineage stays out of the driver JSON
-    (bounded manifest at any file count)."""
-    import os as _os
-
-    from logai_spark.operators.route import (
-        LINEAGE_DIR,
-        file_lineage,
-        footer_lineage_scan,
-    )
-
-    (
-        footer_lineage_scan(spark, routed_path, partition_col)
-        .write.mode("overwrite")
-        .parquet(_os.path.join(routed_path, LINEAGE_DIR))
-    )
-    written = int(
-        file_lineage(spark, routed_path).agg(F.sum("n_rows")).collect()[0][0] or 0
-    )
-    if written != expected_rows:
-        raise RuntimeError(
-            f"routed write inconsistent: parquet has {written} rows, "
-            f"aggregate says {expected_rows}"
-        )
-    return written
+    The written counts come from route.commit_lineage's lineage pass over
+    the parquet footers (route.footer_lineage_scan): metadata reads, never
+    a row scan."""
+    return commit_lineage(spark, routed_path, "route", partition_col, expected)
 
 
 def run_pipeline(
@@ -258,17 +226,9 @@ def run_pipeline(
     sizes = {template_id_of(t): s for t, s in templates}
     hot = hot_key_buckets(sizes, parallelism=spark.sparkContext.defaultParallelism)
     routed_path = os.path.join(out_dir, "routed")
-    manifest = route_to_sinks(
-        enriched,
-        routed_path,
-        "template_id",
-        hot_buckets=hot,
-        stage="route",
-        extra_meta={"hot_sinks": len(hot)},
-        compute_counts=False,
-    )
+    route_to_sinks(enriched, routed_path, "template_id", hot_buckets=hot)
 
-    # windowed aggregate from the persisted line table; per-sink manifest
+    # windowed aggregate from the persisted line table; the expected per-sink
     # counts roll up from the aggregate instead of a second full scan.
     # Two actions total: the parquet write, and ONE collect — of the
     # per-TEMPLATE rollup (one row per sink), NOT the full windowed
@@ -287,13 +247,10 @@ def run_pipeline(
         .collect()
     )
     agg.unpersist()
-    sink_counts = {str(r["template_id"]): int(r["_rows"]) for r in per_sink}
-    manifest["sinks"] = sink_counts
-    manifest["total_rows"] = int(sum(sink_counts.values()))
-    manifest["n_sinks"] = len(sink_counts)
     metrics["agg_rows"] = int(sum(r["_agg_rows"] for r in per_sink))
-    verify_routed_write(spark, routed_path, manifest["total_rows"])
-    write_manifest(routed_path, manifest)
+    manifest = verify_routed_write(
+        spark, routed_path, {r["template_id"]: r["_rows"] for r in per_sink}
+    )
     enriched.unpersist()
     metrics["manifest"] = manifest
     metrics["lines"] = manifest["total_rows"]

@@ -18,7 +18,6 @@ broadcast territory at any realistic host count).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -30,6 +29,7 @@ from logai_spark.functions.webgraph import (
     domain_pagerank,
     link_edges,
 )
+from logai_spark.operators.route import write_manifest
 
 
 def run_webgraph_job(
@@ -79,8 +79,7 @@ def run_webgraph_job(
         "hb_iters": hb_iters,
         "hb_p": hb_p,
     }
-    with open(os.path.join(output, "_webgraph_manifest.json"), "w") as fp:
-        json.dump(manifest, fp, indent=1)
+    write_manifest(output, manifest, "_webgraph_manifest.json")
     return manifest
 
 

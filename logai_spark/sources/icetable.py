@@ -50,6 +50,8 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logai_spark.operators.route import _write_atomic
+
 _FMT_VERSION = 1
 
 
@@ -63,15 +65,6 @@ def _snap_path(path: str, version: int) -> str:
 
 def _current_ptr(path: str) -> str:
     return os.path.join(_meta_dir(path), "_current")
-
-
-def _write_atomic(target: str, payload: str) -> None:
-    tmp = target + ".tmp"
-    with open(tmp, "w") as fp:
-        fp.write(payload)
-        fp.flush()
-        os.fsync(fp.fileno())
-    os.replace(tmp, target)  # atomic on POSIX — the commit point
 
 
 def current_version(path: str) -> int:

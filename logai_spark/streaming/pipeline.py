@@ -31,7 +31,6 @@ workflow on file drops). Design, chosen for exactly-once at 10^12-doc scale:
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +38,7 @@ from pyspark.sql import functions as F
 
 from logai_spark.operators.enrich import enrich
 from logai_spark.operators.features import counter_vector
+from logai_spark.operators.route import manifest_of, write_manifest
 from logai_spark.pipeline import PipelineConfig, extract_parse, lang_dimension
 
 DEAD_LETTER = "__dead_letter__"
@@ -95,12 +95,14 @@ def run_streaming_pipeline(
     cfg = config or PipelineConfig()
     routed_path = os.path.join(out_dir, "routed")
     agg_path = os.path.join(out_dir, "agg_parts")
-    os.makedirs(os.path.join(out_dir, BATCH_MANIFEST_DIR), exist_ok=True)
+    man_dir = os.path.join(out_dir, BATCH_MANIFEST_DIR)
+    os.makedirs(man_dir, exist_ok=True)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        man_path = _batch_manifest_path(out_dir, batch_id)
+        man_name = os.path.basename(_batch_manifest_path(out_dir, batch_id))
         fingerprint = _batch_fingerprint(batch_df)
-        if os.path.exists(man_path):
+        committed = manifest_of(man_dir, man_name)
+        if committed is not None:
             # replay of a fully-committed batch (manifest is written LAST):
             # skip ONLY if the batch carries the same input as the committed
             # one — after checkpoint loss the re-bundled batch 0 may include
@@ -108,8 +110,6 @@ def run_streaming_pipeline(
             # drop them. A mismatch falls through to reprocess: dynamic
             # partition overwrite replaces the batch's own partitions and
             # the manifest is rewritten, so the rerun is exactly-once too.
-            with open(man_path) as fp:
-                committed = json.load(fp)
             if committed.get("input_fingerprint") == fingerprint:
                 return
         sess = batch_df.sparkSession
@@ -120,12 +120,12 @@ def run_streaming_pipeline(
         prev_mode = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            _run_batch(sess, batch_df, batch_id, man_path, fingerprint)
+            _run_batch(sess, batch_df, batch_id, man_name, fingerprint)
         finally:
             sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
     def _run_batch(
-        sess, batch_df: DataFrame, batch_id: int, man_path: str, fingerprint
+        sess, batch_df: DataFrame, batch_id: int, man_name: str, fingerprint
     ) -> None:
         parsed = extract_parse(batch_df, templates, cfg.drain)
         lines = (
@@ -171,8 +171,7 @@ def run_streaming_pipeline(
         manifest["total_rows"] = int(sum(manifest["sinks"].values()))
         manifest["n_sinks"] = len(manifest["sinks"])
         # the commit record: written only after BOTH sinks landed
-        with open(man_path, "w") as fp:
-            json.dump(manifest, fp, indent=1, sort_keys=True)
+        write_manifest(man_dir, manifest, man_name)
 
     writer = (
         pages_stream.writeStream.foreachBatch(_process)
@@ -211,10 +210,10 @@ def streaming_manifest_totals(out_dir: str) -> dict:
     sinks: dict[str, int] = {}
     batches: list[int] = []
     for name in sorted(os.listdir(man_dir)):
-        if not name.startswith("batch_"):
+        # batch_N.json only: a batch_N.json.tmp is a commit that never landed
+        if not (name.startswith("batch_") and name.endswith(".json")):
             continue
-        with open(os.path.join(man_dir, name)) as fp:
-            m = json.load(fp)
+        m = manifest_of(man_dir, name)
         batches.append(m["batch_id"])
         for k, n in m["sinks"].items():
             sinks[k] = sinks.get(k, 0) + int(n)

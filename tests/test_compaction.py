@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logai_spark.operators.route import (
+    commit_lineage,
     compact_sinks,
     manifest_of,
     route_to_sinks,
@@ -32,13 +33,8 @@ def routed(spark, tmp_path):
         df.repartition(6).sortWithinPartitions("template_id").write.mode(
             "append"
         ).partitionBy("template_id").parquet(path)
-    # manifest counts must reflect all three passes for the verify gate
-    m = manifest_of(path)
-    m["sinks"] = {k: 3 * v for k, v in m["sinks"].items()}
-    m["total_rows"] *= 3
-    from logai_spark.operators.route import write_manifest
-
-    write_manifest(path, m)
+    # commit after all three passes: the manifest counts feed the verify gate
+    commit_lineage(spark, path, "route", "template_id")
     return path, df
 
 
@@ -140,3 +136,27 @@ def test_compact_crash_recovery(spark, routed):
     assert os.path.exists(live) and not os.path.exists(live + "._pre_compact")
     assert spark.read.parquet(path).count() == pre
     assert set(out["compacted"]) == set(sinks)
+
+
+def test_compact_null_sink(spark, tmp_path):
+    """Null keys land in the layout's default-partition dir; that sink must
+    compact like any other, leaving no ``_compact_tmp`` behind."""
+    path = str(tmp_path / "routed")
+    rows = [(i, "t1" if i < 40 else None) for i in range(80)]
+    df = spark.createDataFrame(rows, "seq long, template_id string")
+    route_to_sinks(df, path)
+    df.filter(F.col("template_id").isNull()).coalesce(1).write.mode(
+        "append"
+    ).partitionBy("template_id").parquet(path)
+    m = commit_lineage(spark, path, "route", "template_id")
+    null_dir = os.path.join(path, "template_id=__HIVE_DEFAULT_PARTITION__")
+    assert m["sinks"] == {"t1": 40, "__HIVE_DEFAULT_PARTITION__": 80}
+    assert len([f for f in os.listdir(null_dir) if f.endswith(".parquet")]) == 2
+
+    out = compact_sinks(spark, path, target_bytes=1 << 30)
+    assert set(out["compacted"]) == {"__HIVE_DEFAULT_PARTITION__"}
+    assert out["compacted"]["__HIVE_DEFAULT_PARTITION__"]["files_after"] == 1
+    assert not os.path.exists(os.path.join(path, "_compact_tmp"))
+    back = spark.read.parquet(path)
+    assert back.filter(F.col("template_id").isNull()).count() == 80
+    assert back.filter(F.col("template_id") == "t1").count() == 40

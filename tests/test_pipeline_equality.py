@@ -165,10 +165,37 @@ def test_verify_write_gate_fails_on_mismatch(spark, tmp_path):
     m = run_pipeline(spark, pages, out, PipelineConfig())  # gate passes inline
     routed = os.path.join(out, "routed")
     assert os.path.exists(os.path.join(routed, MANIFEST))
-    total = m["manifest"]["total_rows"]
-    assert verify_routed_write(spark, routed, total) == total
+    total, sinks = m["manifest"]["total_rows"], m["manifest"]["sinks"]
+    assert verify_routed_write(spark, routed, sinks)["total_rows"] == total
     # corrupt: drop one sink's data file, then the gate must raise
     victim = sorted(glob.glob(os.path.join(routed, "template_id=*", "*.parquet")))[0]
     os.remove(victim)
     with pytest.raises(RuntimeError, match="routed write inconsistent"):
-        verify_routed_write(spark, routed, total)
+        verify_routed_write(spark, routed, sinks)
+
+
+def test_null_sink_has_one_key(spark, tmp_path):
+    """Lines the sampled dictionary cannot match route to the null sink;
+    the manifest, the file layout and the lineage sidecar all key it the
+    same way, with the same per-sink counts."""
+    from logai_spark.operators.route import file_lineage, sink_file_stats
+
+    out = str(tmp_path / "out")
+    m = run_pipeline(
+        spark,
+        synth_webpages(spark, 600),
+        out,
+        PipelineConfig(sample_fraction_for_mining=0.1),
+    )
+    routed = os.path.join(out, "routed")
+    sinks = m["manifest"]["sinks"]
+    assert sinks.get("__HIVE_DEFAULT_PARTITION__", 0) > 0  # unmatched lines
+    assert set(sinks) == set(sink_file_stats(routed))
+    lineage = {
+        r["template_id"]: r["n"]
+        for r in file_lineage(spark, routed)
+        .groupBy("template_id")
+        .agg(F.sum("n_rows").alias("n"))
+        .collect()
+    }
+    assert lineage == sinks

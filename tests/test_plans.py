@@ -69,13 +69,14 @@ def test_relational_queries_stay_jvm_side(spark):
 
 
 def test_routed_sink_partition_pruning(spark, tmp_path):
-    from logai_spark.operators.route import route_to_sinks
+    from logai_spark.operators.route import commit_lineage, route_to_sinks
 
     pdf = pd.DataFrame(
         {"template_id": ["a"] * 40 + ["b"] * 60, "x": range(100)}
     )
     path = str(tmp_path / "sinks")
     route_to_sinks(spark.createDataFrame(pdf), path)
+    commit_lineage(spark, path, "route", "template_id")
     pruned = spark.read.parquet(path).filter(F.col("template_id") == "b")
     plan = _plan(pruned)
     assert "PartitionFilters" in plan and "template_id" in plan.split("PartitionFilters")[1][:200]

@@ -3,13 +3,16 @@
 import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from logai_spark.operators.route import (
     checkpoint,
+    commit_lineage,
     manifest_of,
     read_sink,
     route_to_sinks,
+    write_manifest,
 )
 
 
@@ -26,7 +29,8 @@ def _routed_df(spark):
 def test_route_and_read_back_rows_equal(spark, tmp_path):
     df = _routed_df(spark)
     path = str(tmp_path / "sinks")
-    manifest = route_to_sinks(df, path, "template_id", hot_buckets={"t1": 4})
+    route_to_sinks(df, path, "template_id", hot_buckets={"t1": 4})
+    manifest = commit_lineage(spark, path, "route", "template_id")
     assert manifest["sinks"] == {"t1": 50, "t2": 30, "t3": 20}
     assert manifest["total_rows"] == 100
 
@@ -45,6 +49,7 @@ def test_sink_read_prunes_partitions(spark, tmp_path):
     df = _routed_df(spark)
     path = str(tmp_path / "sinks2")
     route_to_sinks(df, path, "template_id")
+    commit_lineage(spark, path, "route", "template_id")
     plan = read_sink(spark, path, "t2")._jdf.queryExecution().executedPlan().toString()
     assert "t2" in plan  # partition filter reached the scan
 
@@ -52,9 +57,10 @@ def test_sink_read_prunes_partitions(spark, tmp_path):
 def test_manifest_persisted(spark, tmp_path):
     df = _routed_df(spark)
     path = str(tmp_path / "sinks3")
-    route_to_sinks(df, path, "template_id", extra_meta={"run": "r1"})
+    route_to_sinks(df, path, "template_id")
+    commit_lineage(spark, path, "route", "template_id")
     m = manifest_of(path)
-    assert m is not None and m["n_sinks"] == 3 and m["run"] == "r1"
+    assert m is not None and m["n_sinks"] == 3
 
 
 def test_checkpoint_resume_skips_rewrite(spark, tmp_path):
@@ -66,3 +72,16 @@ def test_checkpoint_resume_skips_rewrite(spark, tmp_path):
     out2 = checkpoint(df.limit(1), path, "stage1")  # would write 1 row if not resumed
     assert out2.count() == 100  # resumed from the manifest, not rewritten
     assert os.path.getmtime(os.path.join(path, "_lineage_manifest.json")) == mtime
+
+
+def test_failed_manifest_write_leaves_previous_manifest(tmp_path):
+    """The manifest is a commit record: a write that fails part-way must
+    leave the previous manifest readable, never a truncated file."""
+    path = str(tmp_path)
+    good = {"stage": "s1", "total_rows": 4}
+    write_manifest(path, good)
+    cyclic: dict = {"stage": "s2", "total_rows": 4}
+    cyclic["self"] = cyclic
+    with pytest.raises(ValueError):
+        write_manifest(path, cyclic)
+    assert manifest_of(path) == good
