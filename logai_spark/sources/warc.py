@@ -348,7 +348,17 @@ def _content_decode(body: bytes, encoding: str) -> bytes:
     enc = encoding.strip().lower()
     try:
         if enc in ("gzip", "x-gzip"):
-            return zlib.decompress(body, 16 + zlib.MAX_WBITS)
+            # a gzip body may hold several members back to back (RFC 1952
+            # §2.2); decode each in turn, and keep the raw bytes if the
+            # stream ends inside one — never a partial decode
+            out, rest = bytearray(), body
+            while rest:
+                member = zlib.decompressobj(16 + zlib.MAX_WBITS)
+                out += member.decompress(rest)
+                if not member.eof:
+                    return body
+                rest = member.unused_data
+            return bytes(out)
         if enc == "deflate":
             try:
                 return zlib.decompress(body)  # zlib-wrapped (the spec)
@@ -367,6 +377,15 @@ def _content_decode(body: bytes, encoding: str) -> bytes:
     except zlib.error:
         return body
     return body
+
+
+def _header_value(hlines: list[bytes], name: bytes) -> bytes:
+    """Value of the first lower-cased HTTP header line starting with
+    ``name`` (which includes the colon), or b"" when there is none."""
+    for hline in hlines:
+        if hline.startswith(name):
+            return hline[len(name) :]
+    return b""
 
 
 def _iter_records(stream: io.BufferedIOBase, fname: str) -> Iterator[dict]:
@@ -416,15 +435,12 @@ def _iter_records(stream: io.BufferedIOBase, fname: str) -> Iterator[dict]:
                 # archived wire bytes: dechunk BEFORE content-decode (RFC
                 # 9112 §6.1 ordering), exactly what warcio's recompression
                 # consumers do; helpers return raw bytes on any failure
-                hl = head.lower()
-                if b"transfer-encoding:" in hl and b"chunked" in hl:
+                hlines = head.lower().split(b"\r\n")
+                if b"chunked" in _header_value(hlines, b"transfer-encoding:"):
                     body = _dechunk(body)
-                for hline in hl.split(b"\r\n"):
-                    if hline.startswith(b"content-encoding:"):
-                        body = _content_decode(
-                            body, hline.split(b":", 1)[1].decode("ascii", "replace")
-                        )
-                        break
+                coding = _header_value(hlines, b"content-encoding:")
+                if coding:
+                    body = _content_decode(body, coding.decode("ascii", "replace"))
         ts = None
         raw_ts = headers.get("warc-date")
         if raw_ts:

@@ -277,3 +277,54 @@ def test_warc_brotli_without_library_keeps_raw(spark, tmp_path):
     ))
     (row,) = read_warc(spark, [str(p)]).collect()
     assert bytes(row.html) == b"\x8b\x03\x80brdata"
+
+
+def test_warc_gzip_members_decoded_or_raw():
+    """A multi-member gzip body decodes to every member's bytes; a stream
+    that ends inside a member comes back raw, never partially decoded."""
+    import random
+
+    from logai_spark.sources.warc import _content_decode, _iter_records
+    import io as _io
+
+    two = gzip.compress(b"hello ") + gzip.compress(b"world")
+    assert _content_decode(two, "gzip") == b"hello world"
+    assert _content_decode(two[:-3], "gzip") == two[:-3]
+
+    rng = random.Random(7)
+    for _ in range(50):
+        data = bytes(rng.randrange(256) for _ in range(rng.randrange(1, 400)))
+        cuts = sorted(rng.sample(range(1, len(data) + 1), min(3, len(data))))
+        parts = [data[a:b] for a, b in zip([0] + cuts, cuts)]
+        parts.append(data[cuts[-1]:])
+        members = [gzip.compress(p) for p in parts]
+        body = b"".join(members)
+        assert _content_decode(body, "gzip") == data
+        # a cut on a member boundary is itself a whole stream; any other
+        # cut ends inside a member and must come back raw
+        ends = {len(b"".join(members[:k])): b"".join(parts[:k])
+                for k in range(1, len(members))}
+        n = rng.randrange(1, len(body))
+        assert _content_decode(body[:n], "gzip") == ends.get(n, body[:n])
+
+    rec = warc_bytes(
+        [("http://mm.io/", "2024-01-01T00:00:00Z", two)],
+        extra_http_headers=b"Content-Encoding: gzip\r\n",
+    )
+    (out,) = list(_iter_records(_io.BufferedReader(_io.BytesIO(rec)), "f.warc"))
+    assert out["html"] == b"hello world"
+
+
+def test_warc_chunked_only_from_transfer_encoding_value():
+    """'chunked' elsewhere in the header block (here an X-Cache value)
+    does not make an identity-framed entity get de-chunked."""
+    from logai_spark.sources.warc import _iter_records
+    import io as _io
+
+    entity = b"4\r\nabcd\r\n0\r\n\r\n"
+    rec = warc_bytes(
+        [("http://te.io/", "2024-01-01T00:00:00Z", entity)],
+        extra_http_headers=b"Transfer-Encoding: identity\r\nX-Cache: chunked-hit\r\n",
+    )
+    (out,) = list(_iter_records(_io.BufferedReader(_io.BytesIO(rec)), "f.warc"))
+    assert out["html"] == entity

@@ -14,8 +14,8 @@ cluster sizes are realized faithfully on one box:
   master live on the remaining 4 cores at BOTH sizes. Without pinning the
   "8-core" cluster silently borrows the idle 24 cores for GC/python/shuffle
   threads and the comparison flatters N;
-* the identical job (cluster_app.py, fixed 64-partition plan, fixed
-  64 shuffle partitions, same input) is spark-submitted to both, so the only
+* the identical job (cluster_app.py: the pipeline leg of tools/scaling.py,
+  fixed 64-partition plan, same input) is spark-submitted to both, so the only
   variable is executor count — with separate JVM heaps/GC per executor like
   a real deployment. The app asserts its output fingerprint (lines,
   templates, sinks) so cross-size equality is checked, not assumed.
@@ -43,6 +43,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 import pyspark
+
+from scaling import FIXED_PLAN_CONF, summary
 
 SPARK_HOME = os.path.dirname(pyspark.__file__)
 SPARK_CLASS = os.path.join(SPARK_HOME, "bin", "spark-class")
@@ -176,8 +178,6 @@ def submit(scratch: str, n_docs: int, tag: str) -> dict:
         "--conf",
         "spark.executor.memory=9g",
         "--conf",
-        "spark.sql.shuffle.partitions=64",
-        "--conf",
         "spark.sql.adaptive.enabled=true",
         "--conf",
         "spark.sql.adaptive.skewJoin.enabled=true",
@@ -191,18 +191,10 @@ def submit(scratch: str, n_docs: int, tag: str) -> dict:
         "spark.python.daemon.module=logai_spark.daemon",
         "--conf",
         f"spark.executorEnv.PYTHONPATH={ROOT}",
-        "--conf",
-        "spark.locality.wait=0s",
-        # At 100TB every shuffle yields thousands of advisory-sized tasks, so
-        # all task slots stay full. At bench scale the default 64MB advisory
-        # coalesces shuffles to FEWER tasks than the cluster has slots (e.g.
-        # 25 tasks on 28 cores) and executors starve between waves. A smaller
-        # advisory size recreates the at-scale regime (tasks >> slots) while
-        # keeping the AQE machinery in the loop.
-        "--conf",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes=8m",
-        "--conf",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize=1m",
+        # the same fixed plan as tools/scaling.py: at bench scale the default
+        # 64MB advisory size would coalesce shuffles to FEWER tasks than the
+        # cluster has slots (e.g. 25 tasks on 28 cores)
+        *(arg for k, v in FIXED_PLAN_CONF.items() for arg in ("--conf", f"{k}={v}")),
         "--conf",
         f"spark.local.dir={os.path.join(scratch, 'spark_local_' + tag)}",
         "--conf",
@@ -258,22 +250,12 @@ def main() -> None:
         master.terminate()
         master.wait(timeout=30)
         subprocess.run(["rm", "-rf", scratch], check=False)
-    eff = round((four["docs_per_sec"] / one["docs_per_sec"]) / 4.0, 3)
-    same_output = (
-        one["lines"] == four["lines"]
-        and one["templates"] == four["templates"]
-        and one["n_sinks"] == four["n_sinks"]
-    )
     print(
         json.dumps(
             {
                 "n_docs": n_docs,
                 "cores_per_executor": EXECUTOR_CORES,
-                f"executors_1x{EXECUTOR_CORES}": one,
-                f"executors_4x{EXECUTOR_CORES}": four,
-                "speedup_N_to_4N": round(four["docs_per_sec"] / one["docs_per_sec"], 2),
-                "scaling_efficiency": eff,
-                "identical_output_across_sizes": same_output,
+                **summary(one, four),
             },
             indent=1,
         )

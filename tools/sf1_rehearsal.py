@@ -11,8 +11,8 @@ duplicates, so the dedup family sees realistic cluster structure at 50k
 docs. The curation pipeline leg runs synth_webpages at 10x the bench's
 20k docs.
 
-Protocol (memory: host-steal-bench-protocol): /proc/stat steal sampled
-around every timed region; runs with steal > 2% are flagged in the
+Protocol: host steal (perfbench/procs.py) sampled around every timed
+region; runs with steal > 2% are flagged in the
 artifact rather than silently averaged. Output: one JSON artifact under
 bench_artifacts/ plus a stdout summary for the BASELINE.md table.
 
@@ -33,6 +33,8 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.procs import steal_frac, steal_ticks  # noqa: E402
 
 DOC_QUERIES = [
     "exact_dedup",
@@ -93,15 +95,9 @@ DOC_QUERIES = [
 ]
 
 
-def _steal() -> tuple[int, int]:
-    parts = open("/proc/stat").readline().split()
-    vals = list(map(int, parts[1:]))
-    return vals[7], sum(vals)
-
-
-def steal_pct(before: tuple[int, int], after: tuple[int, int]) -> float:
-    dt = after[1] - before[1]
-    return round(100.0 * (after[0] - before[0]) / dt, 2) if dt else 0.0
+def steal_pct(before: tuple[int, int]) -> float:
+    """Host steal since ``before`` (a steal_ticks() sample), in percent."""
+    return round(100.0 * steal_frac(before, steal_ticks()), 2)
 
 
 def main() -> None:
@@ -136,7 +132,7 @@ def main() -> None:
         artifact = {"replicas": replicas, "queries": {}}
 
     if leg == "curate":
-        _curate_leg(spark, scratch, artifact, _flush, _steal)
+        _curate_leg(spark, scratch, artifact, _flush)
         shutil.rmtree(scratch, ignore_errors=True)
         return
 
@@ -179,22 +175,22 @@ def main() -> None:
     results = artifact["queries"]
     artifact["n_docs_battery"] = n_docs
     for name in DOC_QUERIES:
-        s0 = _steal()
+        s0 = steal_ticks()
         t0 = time.perf_counter()
         n = qs[name](spark, sf1_dir).count()
         wall = round(time.perf_counter() - t0, 3)
-        sp = steal_pct(s0, _steal())
+        sp = steal_pct(s0)
         results[name] = {"sec": wall, "rows": n, "steal_pct": sp}
         print(f"{name}: {wall}s rows={n} steal={sp}%", flush=True)
         _flush(artifact)  # survive a crash in a later leg
 
     if leg in ("both", "curate"):
-        _curate_leg(spark, scratch, artifact, _flush, _steal)
+        _curate_leg(spark, scratch, artifact, _flush)
     print(json.dumps({"artifact": out_path}))
     shutil.rmtree(scratch, ignore_errors=True)
 
 
-def _curate_leg(spark, scratch, artifact, _flush, _steal) -> None:
+def _curate_leg(spark, scratch, artifact, _flush) -> None:
     """Curation pipeline at 10x the bench's 20k synthetic webpages."""
     from pyspark.sql import functions as F
 
@@ -213,11 +209,11 @@ def _curate_leg(spark, scratch, artifact, _flush, _steal) -> None:
     pages.write.mode("overwrite").parquet(pages_path)
     pages = spark.read.parquet(pages_path)
     cur_out = os.path.join(scratch, "curated")
-    s0 = _steal()
+    s0 = steal_ticks()
     t0 = time.perf_counter()
     counts = run_curation(spark, pages, cur_out, CurationConfig(near_dup=True))
     cur_wall = round(time.perf_counter() - t0, 3)
-    cur_steal = steal_pct(s0, _steal())
+    cur_steal = steal_pct(s0)
     print(f"curate 200k: {cur_wall}s steal={cur_steal}% counts={counts}", flush=True)
     artifact["curate_200k"] = {
         "sec": cur_wall,
