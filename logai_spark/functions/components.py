@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from logai_spark.session import cut_lineage
+
 
 def connected_components(
     edges: DataFrame,
@@ -49,26 +51,13 @@ def connected_components(
     is the MINIMUM node id in the node's connected component (stable,
     deterministic cluster names). Edges are treated as undirected; self
     loops and duplicate edges are tolerated."""
-    # Reliable vs local checkpointing: localCheckpoint(eager=True) stores
-    # blocks on EXECUTORS — losing one mid-iteration kills the job with
-    # unrecoverable lineage. When the session has a reliable checkpoint dir
-    # configured (spark.sparkContext.setCheckpointDir, i.e. HDFS/object
-    # store on a real cluster), use df.checkpoint() so every round survives
-    # executor loss; local mode without a dir keeps the cheaper local form.
-    sc = edges.sparkSession.sparkContext
-    reliable = checkpoint and sc.getCheckpointDir() is not None
-
-    def _ckpt(d: DataFrame) -> DataFrame:
-        return d.checkpoint(eager=True) if reliable else d.localCheckpoint(eager=True)
-
     sym = (
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
         .unionByName(edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d")))
         .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
         .distinct()
     )
-    if checkpoint:
-        sym = _ckpt(sym)
+    sym = cut_lineage(sym, checkpoint)
     labels = sym.select(F.col("_s").alias("id")).distinct().withColumn(
         "label", F.col("id")
     )
@@ -95,8 +84,7 @@ def connected_components(
                 F.least("label", F.coalesce("_llabel", "label")).alias("label"),
             )
         )
-        if checkpoint:
-            jumped = _ckpt(jumped)
+        jumped = cut_lineage(jumped, checkpoint)
         n_changed = jumped.filter(F.col("label") < F.col("_old")).count()
         labels = jumped.select("id", "label")
         if n_changed == 0:

@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from logai_spark.session import cut_lineage
+
 # Flajolet et al. 2007 bias-correction constants.
 _ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
 
@@ -100,23 +102,14 @@ def hyperball_harmonic(
     engines.
     """
     m = 1 << p
-    sc = edges.sparkSession.sparkContext
-    reliable = checkpoint and sc.getCheckpointDir() is not None
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if not checkpoint:
-            return df
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
-
     e = edges.select("src", "dst")
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    if checkpoint:
-        e = _ckpt(e)
-        nodes = _ckpt(nodes)
+    e = cut_lineage(e, checkpoint)
+    nodes = cut_lineage(nodes, checkpoint)
 
     regs = _init_registers(nodes, m)
     prev = _estimate(regs, m)
@@ -128,7 +121,7 @@ def hyperball_harmonic(
         regs = (
             regs.unionByName(nbr).groupBy("node", "reg").agg(F.max("rho").alias("rho"))
         )
-        regs = _ckpt(regs)
+        regs = cut_lineage(regs, checkpoint)
         cur = _estimate(regs, m)
         h = (
             h.join(prev.withColumnRenamed("est", "_pe"), "node")
@@ -141,7 +134,7 @@ def hyperball_harmonic(
                 ).alias("harmonic"),
             )
         )
-        h = _ckpt(h)
+        h = cut_lineage(h, checkpoint)
         prev = cur
     return h.select(F.col("node").alias("domain"), "harmonic")
 

@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from logai_spark.session import cut_lineage
+
 HREF_RE = r'href="([^"]+)"'
 DOMAIN_RE = r"^[a-z]+://([^/]+)"
 # full <a ...>text</a> element: href in group 1, inner text in group 2.
@@ -116,29 +118,19 @@ def domain_pagerank(
     Each iteration's rank vector is checkpointed: ``ranks`` feeds BOTH the
     contribution join and the dangling-mass aggregate, so without lineage
     truncation the logical plan doubles per iteration (~2^iters subtrees —
-    iters=10 already stalls analysis). Same reliable-vs-local policy as
-    connected_components: ``df.checkpoint()`` when the session has a
-    reliable checkpoint dir (cluster), ``localCheckpoint`` otherwise."""
-    sc = edges.sparkSession.sparkContext
-    reliable = checkpoint and sc.getCheckpointDir() is not None
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if not checkpoint:
-            return df
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
-
+    iters=10 already stalls analysis). Reliable-vs-local policy:
+    :func:`logai_spark.session.cut_lineage`."""
     edges = edges.select("src", "dst", F.col("n_links").cast("double").alias("w"))
     nodes = (
         edges.select(F.col("src").alias("domain"))
         .unionByName(edges.select(F.col("dst").alias("domain")))
         .distinct()
     )
-    if checkpoint:
-        # nodes is re-read every iteration (new-rank left join) and edges
-        # twice (contrib + outw already derived); one materialization stops
-        # the href-extraction scan re-running per iteration.
-        edges = _ckpt(edges)
-        nodes = _ckpt(nodes)
+    # nodes is re-read every iteration (new-rank left join) and edges
+    # twice (contrib + outw already derived); one materialization stops
+    # the href-extraction scan re-running per iteration.
+    edges = cut_lineage(edges, checkpoint)
+    nodes = cut_lineage(nodes, checkpoint)
     n_tbl = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
     outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
 
@@ -171,7 +163,7 @@ def domain_pagerank(
                 ).alias("rank"),
             )
         )
-        ranks = _ckpt(ranks)
+        ranks = cut_lineage(ranks, checkpoint)
     return ranks
 
 
@@ -236,23 +228,14 @@ def domain_hits(
     cross-joined back. Scores are checkpointed per iteration (the vector
     feeds both the next join and its normalizer — without lineage
     truncation the plan doubles per iteration, as in pagerank)."""
-    sc = edges.sparkSession.sparkContext
-    reliable = checkpoint and sc.getCheckpointDir() is not None
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if not checkpoint:
-            return df
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
-
     edges = edges.select("src", "dst", F.col("n_links").cast("double").alias("w"))
     nodes = (
         edges.select(F.col("src").alias("domain"))
         .unionByName(edges.select(F.col("dst").alias("domain")))
         .distinct()
     )
-    if checkpoint:
-        edges = _ckpt(edges)
-        nodes = _ckpt(nodes)
+    edges = cut_lineage(edges, checkpoint)
+    nodes = cut_lineage(nodes, checkpoint)
 
     hub = nodes.select("domain", F.lit(1.0).alias("hub"))
     auth = None
@@ -272,7 +255,7 @@ def domain_hits(
                 (F.coalesce(F.col("a"), F.lit(0.0)) / F.col("s")).alias("auth"),
             )
         )
-        auth = _ckpt(auth)
+        auth = cut_lineage(auth, checkpoint)
         hraw = (
             edges.join(F.broadcast(auth), edges["dst"] == auth["domain"])
             .groupBy("src")
@@ -288,7 +271,7 @@ def domain_hits(
                 (F.coalesce(F.col("h"), F.lit(0.0)) / F.col("s")).alias("hub"),
             )
         )
-        hub = _ckpt(hub)
+        hub = cut_lineage(hub, checkpoint)
     # both sides are |domains|-sized score vectors — broadcast the
     # assembly join like every per-iteration join (post-checkpoint the
     # inputs carry no stats, so without the hint this falls to an SMJ)

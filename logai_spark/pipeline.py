@@ -11,9 +11,12 @@ This is the north_star flow (BASELINE.json): Common-Crawl-style pages
 5. route     — fan-out to per-template sinks (salted, manifested),
 6. aggregate — per-template x time-window counter vectors.
 
-Each stage is a lazy DataFrame transform; `run_pipeline` triggers two actions
-(the routed write and the aggregate collect/write). Stage boundaries can
-checkpoint via operators.route.checkpoint for idempotent resume.
+`run_pipeline` mines the template dictionary, then hands stages 1-6 to
+`parse_route_aggregate`, the one post-mining tail that each streaming
+micro-batch (streaming/pipeline.py) runs too. The tail's actions are the
+routed write, the aggregate write, one per-sink rollup collect and the
+write-audit commit. Stage boundaries can checkpoint via
+operators.route.checkpoint for idempotent resume.
 """
 
 from __future__ import annotations
@@ -179,15 +182,75 @@ def verify_routed_write(
     return commit_lineage(spark, routed_path, "route", partition_col, expected)
 
 
+def parse_route_aggregate(
+    spark: SparkSession,
+    pages: DataFrame,
+    templates: list[tuple[str, int]],
+    routed_path: str,
+    agg_path: str,
+    cfg: PipelineConfig,
+) -> tuple[dict, int]:
+    """The post-mining tail: extract+match ``pages`` against the frozen
+    ``templates``, enrich, route to per-template sinks at ``routed_path``,
+    write the windowed aggregate to ``agg_path`` and certify the routed
+    write against it. Returns (routed manifest, aggregate rows).
+
+    Unmatched lines keep a null template id and land in the
+    :data:`~logai_spark.operators.route.NULL_SINK` sink."""
+    # one Python crossing for extract+match: the fused path won every
+    # measured duplication and worker count (BASELINE.md §3.3)
+    parsed = extract_parse(pages, templates, cfg.drain, charset_sniff=cfg.charset_sniff)
+    enriched = enrich(parsed, lang_dimension(spark), "lang", select=["lang_name", "script"])
+    # The parsed+enriched line table is consumed twice (routed write +
+    # windowed aggregate). Persisting it means the expensive fused
+    # extract+match python stage runs ONCE; the aggregate then reads
+    # executor-local cached blocks (memory, spilling to executor disk)
+    # instead of re-scanning the routed files from shared storage —
+    # one less full-table IO round trip, and no driver-side file
+    # listing of N sink directories.
+    enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
+    # skew handling: template sizes from the mining pass tell us which
+    # sinks are hot; only those get salted across writer tasks
+    sizes = {template_id_of(t): s for t, s in templates}
+    hot = hot_key_buckets(sizes, parallelism=spark.sparkContext.defaultParallelism)
+    route_to_sinks(enriched, routed_path, "template_id", hot_buckets=hot)
+
+    # windowed aggregate from the persisted line table; the expected per-sink
+    # counts roll up from the aggregate instead of a second full scan.
+    # Two actions total: the parquet write, and ONE collect — of the
+    # per-TEMPLATE rollup (one row per sink), NOT the full windowed
+    # aggregate: windows x templates grows unboundedly with time range
+    # (10^7+ rows at fine windows over a long corpus) while #sinks is the
+    # bounded routing fan-out. The rollup is executor-side partial-agg over
+    # the persisted agg blocks; the driver only ever sees #sinks rows.
+    agg = counter_vector(enriched, ["template_id", "lang"], "warc_ts", cfg.window).persist()
+    agg.write.mode("overwrite").parquet(agg_path)
+    per_sink = (
+        agg.groupBy("template_id")
+        .agg(
+            F.sum("counts").alias("_rows"),
+            F.count(F.lit(1)).alias("_agg_rows"),
+        )
+        .collect()
+    )
+    agg.unpersist()
+    manifest = verify_routed_write(
+        spark, routed_path, {r["template_id"]: r["_rows"] for r in per_sink}
+    )
+    enriched.unpersist()
+    return manifest, int(sum(r["_agg_rows"] for r in per_sink))
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     out_dir: str,
     config: PipelineConfig | None = None,
 ) -> dict:
-    """Run the full flow; returns metrics {docs, lines, templates, manifest,
-    agg_rows}. All counts come from the pipeline's own outputs so callers can
-    check them against an oracle run."""
+    """Run the full flow; returns metrics {templates, templates_list,
+    duplication, agg_rows, manifest, lines}. All counts come from the
+    pipeline's own outputs so callers can check them against an oracle
+    run."""
     cfg = config or PipelineConfig()
     mine_pages = pages
     if cfg.sample_fraction_for_mining < 1.0:
@@ -203,55 +266,19 @@ def run_pipeline(
     templates, mine_stats = mine_templates(
         pages_to_lines(mine_pages), "logline", cfg.drain, return_stats=True
     )
-    # one Python crossing for extract+match: the fused path won every
-    # measured duplication and worker count (BASELINE.md §3.3)
-    parsed = extract_parse(pages, templates, cfg.drain, charset_sniff=cfg.charset_sniff)
-    enriched = enrich(parsed, lang_dimension(spark), "lang", select=["lang_name", "script"])
-
-    metrics: dict = {
+    manifest, agg_rows = parse_route_aggregate(
+        spark,
+        pages,
+        templates,
+        os.path.join(out_dir, "routed"),
+        os.path.join(out_dir, "agg"),
+        cfg,
+    )
+    return {
         "templates": len(templates),
         "templates_list": templates,
         "duplication": round(mine_stats["duplication"], 2),
+        "agg_rows": agg_rows,
+        "manifest": manifest,
+        "lines": manifest["total_rows"],
     }
-    # The parsed+enriched line table is consumed twice (routed write +
-    # windowed aggregate). Persisting it means the expensive fused
-    # extract+match python stage runs ONCE; the aggregate then reads
-    # executor-local cached blocks (memory, spilling to executor disk)
-    # instead of re-scanning the routed files from shared storage —
-    # one less full-table IO round trip, and no driver-side file
-    # listing of N sink directories.
-    enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
-    # skew handling: template sizes from the mining pass tell us which
-    # sinks are hot; only those get salted across writer tasks
-    sizes = {template_id_of(t): s for t, s in templates}
-    hot = hot_key_buckets(sizes, parallelism=spark.sparkContext.defaultParallelism)
-    routed_path = os.path.join(out_dir, "routed")
-    route_to_sinks(enriched, routed_path, "template_id", hot_buckets=hot)
-
-    # windowed aggregate from the persisted line table; the expected per-sink
-    # counts roll up from the aggregate instead of a second full scan.
-    # Two actions total: the parquet write, and ONE collect — of the
-    # per-TEMPLATE rollup (one row per sink), NOT the full windowed
-    # aggregate: windows x templates grows unboundedly with time range
-    # (10^7+ rows at fine windows over a long corpus) while #sinks is the
-    # bounded routing fan-out. The rollup is executor-side partial-agg over
-    # the persisted agg blocks; the driver only ever sees #sinks rows.
-    agg = counter_vector(enriched, ["template_id", "lang"], "warc_ts", cfg.window).persist()
-    agg.write.mode("overwrite").parquet(os.path.join(out_dir, "agg"))
-    per_sink = (
-        agg.groupBy("template_id")
-        .agg(
-            F.sum("counts").alias("_rows"),
-            F.count(F.lit(1)).alias("_agg_rows"),
-        )
-        .collect()
-    )
-    agg.unpersist()
-    metrics["agg_rows"] = int(sum(r["_agg_rows"] for r in per_sink))
-    manifest = verify_routed_write(
-        spark, routed_path, {r["template_id"]: r["_rows"] for r in per_sink}
-    )
-    enriched.unpersist()
-    metrics["manifest"] = manifest
-    metrics["lines"] = manifest["total_rows"]
-    return metrics

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -70,3 +70,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def cut_lineage(df: DataFrame, checkpoint: bool = True) -> DataFrame:
+    """Materialize ``df`` with an eager checkpoint so iterative plans stay
+    O(1) deep; ``df`` itself when ``checkpoint`` is False.
+
+    Reliable vs local checkpointing: localCheckpoint(eager=True) stores
+    blocks on EXECUTORS — losing one mid-iteration kills the job with
+    unrecoverable lineage. When the session has a reliable checkpoint dir
+    configured (spark.sparkContext.setCheckpointDir, i.e. HDFS/object
+    store on a real cluster), use df.checkpoint() so every round survives
+    executor loss; local mode without a dir keeps the cheaper local form."""
+    if not checkpoint:
+        return df
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

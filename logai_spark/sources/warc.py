@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import gzip
 import io
+import re
 from datetime import datetime, timezone
 from typing import Iterable, Iterator
 
@@ -316,26 +317,41 @@ def parse_wat(df: DataFrame, body_col: str = "html") -> DataFrame:
 # ------------------------------------------------------------------ reader --
 
 
+# chunk-size line (RFC 9112 §7.1): 1*HEXDIG, then chunk extensions, each
+# opened by ";" after optional whitespace. int(..., 16) alone would also
+# take "0x", "_" and a sign.
+_CHUNK_SIZE = re.compile(rb"([0-9A-Fa-f]+)(?:[ \t]*;.*)?")
+
+
 def _dechunk(body: bytes) -> bytes:
     """Decode HTTP/1.1 chunked transfer framing (RFC 9112 §7.1) — WARC
     writers capture the raw wire bytes, so archived responses can carry
-    the chunk-size lines inside the entity body. Returns the raw input
-    unchanged if the framing is malformed (defensive: never lose bytes)."""
+    the chunk-size lines inside the entity body. The body must end with
+    the last chunk, its trailer fields and the closing empty line. Returns
+    the raw input unchanged if the framing is malformed or truncated
+    (defensive: never lose bytes)."""
     out = bytearray()
     i = 0
     try:
         while True:
             j = body.index(b"\r\n", i)
-            size = int(body[i:j].split(b";", 1)[0], 16)  # drop chunk exts
-            if size == 0:
-                return bytes(out)
-            k = j + 2
-            out += body[k : k + size]
-            if body[k + size : k + size + 2] != b"\r\n":
+            m = _CHUNK_SIZE.fullmatch(body, i, j)
+            if m is None:
                 return body
-            i = k + size + 2
-    except (ValueError, IndexError):
+            size = int(m.group(1), 16)
+            i = j + 2
+            if size == 0:
+                break
+            out += body[i : i + size]
+            if body[i + size : i + size + 2] != b"\r\n":
+                return body
+            i += size + 2
+        # trailer fields, up to the empty line that closes the message
+        while (j := body.index(b"\r\n", i)) != i:
+            i = j + 2
+    except ValueError:
         return body
+    return bytes(out) if i + 2 == len(body) else body
 
 
 def _content_decode(body: bytes, encoding: str) -> bytes:

@@ -4,26 +4,30 @@ Streaming analog of :func:`logai_spark.pipeline.run_pipeline` (the reference
 is batch-only — SURVEY.md §2.12; nearest analog is re-running the batch
 workflow on file drops). Design, chosen for exactly-once at 10^12-doc scale:
 
-- ONE streaming query with ``foreachBatch``: every micro-batch runs the same
-  fused extract+match crossing, broadcast-dim enrichment, and fan-out route
-  as the batch pipeline — per-batch work is stateless, so the stream scales
+- ONE streaming query with ``foreachBatch``: every micro-batch runs the
+  batch pipeline's own post-mining tail,
+  :func:`logai_spark.pipeline.parse_route_aggregate` — fused extract+match,
+  broadcast-dim enrichment, skew-salted fan-out route, aggregate and the
+  write-audit commit. Per-batch work is stateless, so the stream scales
   exactly like the batch job.
 - **Idempotent batch commits instead of streaming state.** Each micro-batch
-  writes under its own ``batch_id=N`` partition with dynamic partition
+  writes straight into its own ``batch_id=N`` directories with a plain
   overwrite, so a replayed batch (failure before the checkpoint advanced)
-  OVERWRITES its own half-written output instead of appending duplicates;
-  a per-batch lineage manifest (written last, after both sinks) marks the
-  batch committed and short-circuits fully-committed replays. Output is
-  exactly-once without a transactional sink.
+  REPLACES its own half-written output instead of appending duplicates; a
+  per-batch commit record (written last, after both sinks passed the
+  audit) marks the batch committed and short-circuits fully-committed
+  replays. Output is exactly-once without a transactional sink.
 - **Associative partial aggregates instead of watermarked state.** The
-  windowed counter vectors are summable, so each batch appends its PARTIAL
+  windowed counter vectors are summable, so each batch writes its PARTIAL
   per-window counts and :func:`read_streaming_agg` re-sums at read time.
   Late data therefore lands in its true event-time window no matter how
   late it arrives — no watermark, no dropped rows, no unbounded state store
   (the streaming-counters module keeps the watermarked variants for
   latency-bounded consumers).
-- Dead-letter routing: lines the broadcast dictionary cannot match land in
-  an explicit ``template_id=__dead_letter__`` sink; feed that sink to
+- Dead-letter lines: lines the broadcast dictionary cannot match keep a null
+  ``template_id`` and land in the null sink
+  (:data:`~logai_spark.operators.route.NULL_SINK`), as in batch runs; feed
+  the ``template_id IS NULL`` rows to
   :func:`logai_spark.parse.distributed.update_templates` to evolve the
   dictionary without re-mining the corpus, then restart the stream with the
   updated broadcast.
@@ -36,12 +40,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from logai_spark.operators.enrich import enrich
-from logai_spark.operators.features import counter_vector
 from logai_spark.operators.route import manifest_of, write_manifest
-from logai_spark.pipeline import PipelineConfig, extract_parse, lang_dimension
+from logai_spark.pipeline import PipelineConfig, parse_route_aggregate
 
-DEAD_LETTER = "__dead_letter__"
 BATCH_MANIFEST_DIR = "stream_manifests"
 
 
@@ -107,70 +108,24 @@ def run_streaming_pipeline(
             # skip ONLY if the batch carries the same input as the committed
             # one — after checkpoint loss the re-bundled batch 0 may include
             # files the old batch 0 never saw, and skipping would silently
-            # drop them. A mismatch falls through to reprocess: dynamic
-            # partition overwrite replaces the batch's own partitions and
-            # the manifest is rewritten, so the rerun is exactly-once too.
+            # drop them. A mismatch falls through to reprocess: the overwrite
+            # replaces the batch's own directories and the manifest is
+            # rewritten, so the rerun is exactly-once too.
             if committed.get("input_fingerprint") == fingerprint:
                 return
-        sess = batch_df.sparkSession
-        # dynamic overwrite: only the touched batch_id partitions are
-        # replaced, so a replayed half-written batch self-heals. Restored
-        # after the batch — leaking 'dynamic' session-wide would change the
-        # semantics of every full-path overwrite in the batch pipeline.
-        prev_mode = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            _run_batch(sess, batch_df, batch_id, man_name, fingerprint)
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-    def _run_batch(
-        sess, batch_df: DataFrame, batch_id: int, man_name: str, fingerprint
-    ) -> None:
-        parsed = extract_parse(batch_df, templates, cfg.drain)
-        lines = (
-            enrich(parsed, lang_dimension(sess), "lang", select=["lang_name", "script"])
-            .withColumn(
-                "template_id",
-                F.coalesce(F.col("template_id"), F.lit(DEAD_LETTER)),
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
+        part = f"batch_id={int(batch_id)}"
+        routed, _ = parse_route_aggregate(
+            batch_df.sparkSession,
+            batch_df,
+            templates,
+            os.path.join(routed_path, part),
+            os.path.join(agg_path, part),
+            cfg,
         )
-        from pyspark import StorageLevel
-
-        lines = lines.persist(StorageLevel.MEMORY_AND_DISK)
-        (
-            lines.repartition(F.col("template_id"))
-            .sortWithinPartitions("template_id")
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "template_id")
-            .parquet(routed_path)
-        )
-        part = counter_vector(
-            lines, ["template_id", "lang"], "warc_ts", cfg.window
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        part = part.persist(StorageLevel.MEMORY_AND_DISK)
-        (
-            part.coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(agg_path)
-        )
-        # per-sink counts roll up from the partial aggregate (#sinks rows to
-        # the driver, never the full window x template frame)
-        per_sink = (
-            part.groupBy("template_id").agg(F.sum("counts").alias("n")).collect()
-        )
-        part.unpersist()
-        lines.unpersist()
-        manifest = {
-            "batch_id": int(batch_id),
-            "input_fingerprint": fingerprint,
-            "sinks": {str(r["template_id"]): int(r["n"]) for r in per_sink},
-        }
-        manifest["total_rows"] = int(sum(manifest["sinks"].values()))
-        manifest["n_sinks"] = len(manifest["sinks"])
-        # the commit record: written only after BOTH sinks landed
+        # the commit record: written only after BOTH sinks landed and the
+        # routed write passed its audit
+        manifest = {"batch_id": int(batch_id), "input_fingerprint": fingerprint}
+        manifest.update({k: routed[k] for k in ("sinks", "total_rows", "n_sinks")})
         write_manifest(man_dir, manifest, man_name)
 
     writer = (

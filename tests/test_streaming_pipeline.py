@@ -1,18 +1,22 @@
-"""End-to-end streaming pipeline: routed-row + aggregate equality vs the
-batch pipeline, exactly-once on replay, manifest lineage."""
+"""End-to-end streaming pipeline: routed rows, aggregate and sink counts
+equal the batch pipeline's, exactly-once on replay, charset sniffing, and
+the write-audit gate on every batch commit."""
 
+import datetime
+import glob
 import os
 import shutil
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
-from logai_spark.operators.features import counter_vector
+from logai_spark import pipeline
+from logai_spark.operators.route import NULL_SINK
 from logai_spark.parse.distributed import mine_templates
-from logai_spark.pipeline import extract_parse, pages_to_lines
-from logai_spark.sources.webpages import synth_webpages
+from logai_spark.pipeline import PipelineConfig, pages_to_lines, run_pipeline
+from logai_spark.sources.webpages import WEBPAGE_SCHEMA, synth_webpages
 from logai_spark.streaming.pipeline import (
-    DEAD_LETTER,
     _batch_manifest_path,
     read_streaming_agg,
     read_streaming_routed,
@@ -45,44 +49,79 @@ def _stream(spark, pages_dir):
 
 
 def test_streaming_pipeline_matches_batch(spark, pages_dir, tmp_path):
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
+    """Streaming the pages with a dictionary mined on a 10% sample gives the
+    batch run's routed rows, aggregate and per-sink counts, the null sink of
+    unmatched lines included."""
     pages = synth_webpages(spark, 120)
-    templates = mine_templates(pages_to_lines(pages))
+    batch = str(tmp_path / "batch")
+    m = run_pipeline(spark, pages, batch, PipelineConfig(sample_fraction_for_mining=0.1))
+    out = str(tmp_path / "out")
     run_streaming_pipeline(
-        spark, _stream(spark, pages_dir), out, templates, checkpoint_dir=ckpt
+        spark,
+        _stream(spark, pages_dir),
+        out,
+        m["templates_list"],
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
 
-    # routed-row equality vs the batch fused extract+match on the same pages
-    routed = read_streaming_routed(spark, out).select(
-        "url",
-        "seq",
-        F.when(F.col("template_id") == DEAD_LETTER, F.lit(None))
-        .otherwise(F.col("template_id"))
-        .alias("template_id"),
-    )
-    expected = extract_parse(pages, templates).select("url", "seq", "template_id")
-    assert routed.exceptAll(expected).count() == 0
-    assert expected.exceptAll(routed).count() == 0
+    exp = spark.read.parquet(os.path.join(batch, "routed"))
+    routed = read_streaming_routed(spark, out).select(*exp.columns)
+    assert routed.exceptAll(exp).count() == 0
+    assert exp.exceptAll(routed).count() == 0
 
-    # aggregate equality: summed partials == batch counter_vector
-    agg = read_streaming_agg(spark, out)
-    exp_agg = counter_vector(
-        extract_parse(pages, templates)
-        .withColumn(
-            "template_id", F.coalesce(F.col("template_id"), F.lit(DEAD_LETTER))
-        ),
-        ["template_id", "lang"],
-        "warc_ts",
-        "1 hour",
-    )
+    # summed partials == the batch aggregate
+    exp_agg = spark.read.parquet(os.path.join(batch, "agg"))
+    agg = read_streaming_agg(spark, out).select(*exp_agg.columns)
     assert agg.exceptAll(exp_agg).count() == 0
     assert exp_agg.exceptAll(agg).count() == 0
 
-    # lineage rollup agrees with the data
     totals = streaming_manifest_totals(out)
-    assert totals["total_rows"] == read_streaming_routed(spark, out).count()
+    assert totals["sinks"] == m["manifest"]["sinks"]
+    assert totals["sinks"][NULL_SINK] > 0
     assert len(totals["batches"]) == 2  # one per source file
+
+
+def test_streaming_pipeline_honours_charset_sniff(spark, tmp_path):
+    src = str(tmp_path / "src")
+    page = "<html><body><p>“smart” café</p></body></html>".encode("cp1252")
+    spark.createDataFrame(
+        [("http://cp.io/", datetime.datetime(2024, 1, 1), page, "", "fr")],
+        WEBPAGE_SCHEMA,
+    ).write.parquet(src)
+    out = str(tmp_path / "out")
+    run_streaming_pipeline(
+        spark,
+        spark.readStream.schema(WEBPAGE_SCHEMA).parquet(src),
+        out,
+        [],
+        PipelineConfig(charset_sniff=True),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    lines = [r.logline for r in read_streaming_routed(spark, out).collect()]
+    assert "“smart” café" in lines
+
+
+def test_streaming_corrupted_sink_fails_batch_commit(spark, pages_dir, tmp_path, monkeypatch):
+    """A sink file lost between the routed write and the commit fails the
+    batch's audit: the query errors and no commit record lands."""
+    real = pipeline.route_to_sinks
+
+    def torn(df, path, *args, **kwargs):
+        real(df, path, *args, **kwargs)
+        os.remove(sorted(glob.glob(os.path.join(path, "*", "*.parquet")))[0])
+
+    monkeypatch.setattr(pipeline, "route_to_sinks", torn)
+    out = str(tmp_path / "out")
+    templates = mine_templates(pages_to_lines(synth_webpages(spark, 120)))
+    with pytest.raises(StreamingQueryException, match="routed write inconsistent"):
+        run_streaming_pipeline(
+            spark,
+            _stream(spark, pages_dir),
+            out,
+            templates,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+    assert not os.path.exists(_batch_manifest_path(out, 0))
 
 
 def test_streaming_pipeline_exactly_once_on_replay(spark, pages_dir, tmp_path):
@@ -99,7 +138,7 @@ def test_streaming_pipeline_exactly_once_on_replay(spark, pages_dir, tmp_path):
     assert read_streaming_routed(spark, out).count() == n1
 
     # full replay (checkpoint lost): committed-batch manifests short-circuit,
-    # dynamic batch_id overwrite self-heals — still no duplicates
+    # the batch_id=N overwrite self-heals — still no duplicates
     shutil.rmtree(ckpt)
     run_streaming_pipeline(
         spark, stream, out, templates, checkpoint_dir=str(tmp_path / "ckpt2")

@@ -328,3 +328,43 @@ def test_warc_chunked_only_from_transfer_encoding_value():
     )
     (out,) = list(_iter_records(_io.BufferedReader(_io.BytesIO(rec)), "f.warc"))
     assert out["html"] == entity
+
+
+def test_warc_dechunk_strict_framing_roundtrip_or_raw():
+    """Chunk sizes are 1*HEXDIG only (RFC 9112 §7.1): the "0x", "_" and sign
+    spellings int(..., 16) would take come back raw. Seeded random payloads,
+    split into random chunks with random extensions and trailers, always
+    de-chunk to the payload, and every truncation comes back raw."""
+    import random
+
+    from logai_spark.sources.warc import _dechunk
+
+    for bad in (b"0x4", b"0_4", b"+4", b"-4", b" 4", b"4 ", b""):
+        body = bad + b"\r\nabcd\r\n0\r\n\r\n"
+        assert _dechunk(body) == body
+    assert _dechunk(b"4\t ;x=1\r\nabcd\r\n0\r\n\r\n") == b"abcd"
+
+    rng = random.Random(11)
+
+    def ext():
+        name = rng.choice([b"x", b"ext", b"a-b"])
+        val = rng.choice([b"", b"=1", b'="q v"'])
+        return rng.choice([b"", b" ", b"\t "]) + b";" + name + val
+
+    for _ in range(60):
+        data = bytes(rng.randrange(256) for _ in range(rng.randrange(0, 200)))
+        cuts = sorted(rng.sample(range(1, len(data)), min(3, max(len(data) - 1, 0))))
+        framed = bytearray()
+        for a, b in zip([0] + cuts, cuts + [len(data)]):
+            if a == b:
+                continue
+            size = format(b - a, rng.choice(["x", "X", "04x"])).encode()
+            exts = b"".join(ext() for _ in range(rng.randrange(3)))
+            framed += size + exts + b"\r\n" + data[a:b] + b"\r\n"
+        framed += b"0" + (ext() if rng.random() < 0.5 else b"") + b"\r\n"
+        framed += b"".join(b"X-T%d: v\r\n" % k for k in range(rng.randrange(3)))
+        framed += b"\r\n"
+        framed = bytes(framed)
+        assert _dechunk(framed) == data
+        for n in range(len(framed)):
+            assert _dechunk(framed[:n]) == framed[:n]
