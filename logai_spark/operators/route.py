@@ -17,8 +17,11 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 MANIFEST = "_lineage_manifest.json"
 LINEAGE_DIR = "_lineage_files"  # parquet sidecar: per-FILE lineage rows
@@ -38,15 +41,49 @@ def file_lineage(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(os.path.join(path, LINEAGE_DIR))
 
 
+def _hidden(name: str) -> bool:
+    """Spark's hidden-path rule (``HadoopFSUtils.shouldFilterOutPathName``):
+    a path component that starts with ``.``, starts with ``_`` and has no
+    ``=``, or ends with ``._COPYING_`` is not data — ``_SUCCESS``, ``.crc``
+    files, ``_temporary/``, ``_lineage_files/``, ``_compact_tmp/``."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def list_data_files(path: str) -> tuple[pafs.FileSystem, list[str]]:
+    """The data files of the parquet layout at ``path``, listed on the
+    driver with ``pyarrow.fs`` (local paths, or any URI pyarrow opens, e.g.
+    ``s3://``) under Spark's hidden-path rule: the same files a
+    ``spark.read.parquet(path)`` scan plans, without its listing and
+    schema-inference jobs — and an empty write (only ``_SUCCESS``) lists as
+    no files instead of failing schema inference.
+
+    Returns (filesystem, sorted file paths on that filesystem)."""
+    if "://" in path:
+        fs, root = pafs.FileSystem.from_uri(path)
+    else:
+        fs, root = pafs.LocalFileSystem(), os.path.abspath(path)
+    root = root.rstrip("/")
+    files = [
+        info.path
+        for info in fs.get_file_info(pafs.FileSelector(root, recursive=True))
+        if info.type == pafs.FileType.File
+        and not any(map(_hidden, info.path[len(root) + 1 :].split("/")))
+    ]
+    return fs, sorted(files)
+
+
 def footer_lineage_scan(
     spark: SparkSession,
     path: str,
     partition_col: str | None = None,
     driver_threshold: int = 4096,
-) -> DataFrame:
-    """Per-file row counts from parquet FOOTER metadata, distributed:
-    list the layout's data files (the same driver-side listing every scan's
-    planning performs), fan the paths out to executors, and read each
+) -> pa.Table | DataFrame:
+    """Per-file row counts from parquet FOOTER metadata: list the layout's
+    data files on the driver (:func:`list_data_files`) and read each
     footer's ``num_rows`` with pyarrow. No row-group data is ever read, so
     the cost scales with FILE COUNT, not table bytes — unlike an
     empty-schema ``spark.read.parquet(path).groupBy(input_file_name())``
@@ -56,52 +93,51 @@ def footer_lineage_scan(
     answers from the same footer row counts, and a truncated file fails
     the footer read loudly.
 
-    Returns ([partition_col,] file, n_rows); the sink key is decoded from
-    the ``partition_col=value`` path segment (hive layout), percent-escapes
-    unquoted exactly as Spark's partition reader does. Local/posix paths
-    here; on an object store pyarrow opens s3://... URIs natively — only
-    the file:// prefix needs stripping.
+    Rows are ([partition_col,] file, n_rows); the sink key is decoded from
+    the ``partition_col=value`` directory name (hive layout), percent-escapes
+    unquoted exactly as Spark's partition reader does.
 
     Small layouts (<= ``driver_threshold`` files) read their footers on the
-    DRIVER in a plain loop: at ~1 ms per footer that beats spinning up
-    Arrow python workers and a Spark job by seconds, the same
-    small-side-goes-local reasoning as a broadcast join. Big layouts fan
-    out with mapInPandas so lineage cost stays file-count-proportional and
-    never concentrates on the driver."""
-    files = sorted(spark.read.parquet(path).inputFiles())
+    DRIVER in a plain loop and come back as a ``pyarrow.Table``: at ~1 ms
+    per footer that beats spinning up Python workers and a Spark job by
+    seconds, the same small-side-goes-local reasoning as a broadcast join.
+    Big layouts come back as a DataFrame that fans the paths out with
+    mapInPandas, so lineage cost stays file-count-proportional and never
+    concentrates on the driver."""
+    fs, files = list_data_files(path)
     pcol = partition_col
-    schema = (f"`{pcol}` string, " if pcol else "") + "file string, n_rows long"
+    schema = pa.schema(
+        ([(pcol, pa.string())] if pcol else [])
+        + [("file", pa.string()), ("n_rows", pa.int64())]
+    )
 
-    def _footer_row(uri: str) -> tuple:
-        import re as _re
+    def _footer_row(p: str) -> dict:
         from urllib.parse import unquote
 
         import pyarrow.parquet as _pq
 
-        local = _re.sub(r"^file:(//)?", "", uri)
-        rec: list = [uri.rsplit("/", 1)[-1], _pq.read_metadata(local).num_rows]
+        parent, name = p.rsplit("/", 2)[-2:]
+        row = {"file": name, "n_rows": _pq.read_metadata(p, filesystem=fs).num_rows}
         if pcol is not None:
-            m = _re.search(_re.escape(pcol) + r"=([^/]+)/", uri)
-            rec.insert(0, unquote(m.group(1)) if m else None)
-        return tuple(rec)
+            prefix = pcol + "="
+            row[pcol] = unquote(parent[len(prefix) :]) if parent.startswith(prefix) else None
+        return row
 
     if len(files) <= driver_threshold:
-        return spark.createDataFrame([_footer_row(u) for u in files], schema)
+        return pa.Table.from_pylist([_footer_row(p) for p in files], schema=schema)
 
     par = max(1, min(len(files), spark.sparkContext.defaultParallelism))
-    paths_df = spark.createDataFrame(
-        [(p,) for p in files], "path string"
-    ).repartition(par)
+    paths_df = spark.createDataFrame(pa.table({"path": files})).repartition(par)
 
     def _read_footers(batches):
         import pandas as _pd
 
-        cols = ([pcol] if pcol else []) + ["file", "n_rows"]
         for pdf in batches:
-            rows = [_footer_row(uri) for uri in pdf["path"]]
-            yield _pd.DataFrame(rows, columns=cols)
+            yield _pd.DataFrame(
+                [_footer_row(p) for p in pdf["path"]], columns=schema.names
+            )
 
-    return paths_df.mapInPandas(_read_footers, schema=schema)
+    return paths_df.mapInPandas(_read_footers, schema=from_arrow_schema(schema))
 
 
 def salted_repartition(df: DataFrame, key: str, salt_buckets: int = 8) -> DataFrame:
@@ -200,23 +236,33 @@ def write_lineage(
 ) -> dict:
     """The lineage pass: per-FILE row counts from the parquet footers of
     ``data_path`` (:func:`footer_lineage_scan`, no row scan) land in the
-    parquet sidecar at ``lineage_path`` without touching the driver; only
-    the per-key totals, O(#sinks), are collected. Returns {sink key: rows},
-    keyed as the layout spells them (:data:`NULL_SINK` for the null key), or
-    {None: rows} for an unpartitioned layout."""
-    (
-        footer_lineage_scan(spark, data_path, partition_col)
-        .write.mode("overwrite")
-        .parquet(lineage_path)
-    )
-    keys = [partition_col] if partition_col else []
-    return {
-        (str(r[partition_col]) if partition_col else None): int(r["n"] or 0)
-        for r in spark.read.parquet(lineage_path)
-        .groupBy(*keys)
-        .agg(F.sum("n_rows").alias("n"))
-        .collect()
-    }
+    parquet sidecar at ``lineage_path``. Returns {sink key: rows}, keyed as
+    the layout spells them (:data:`NULL_SINK` for the null key), or
+    {None: rows} for an unpartitioned layout.
+
+    A small layout's footers are already on the driver: Spark writes the
+    sidecar from that Arrow table (a JVM local relation, one job) and the
+    per-key totals are summed from the same rows. A big layout's fan-out
+    writes the sidecar on the executors; only the per-key totals,
+    O(#sinks), are collected back."""
+    scan = footer_lineage_scan(spark, data_path, partition_col)
+    if isinstance(scan, pa.Table):
+        spark.createDataFrame(scan).write.mode("overwrite").parquet(lineage_path)
+        rows = scan.to_pylist()
+    else:
+        scan.write.mode("overwrite").parquet(lineage_path)
+        keys = [partition_col] if partition_col else []
+        rows = (
+            spark.read.parquet(lineage_path)
+            .groupBy(*keys)
+            .agg(F.sum("n_rows").alias("n_rows"))
+            .collect()
+        )
+    counts: dict = {} if partition_col else {None: 0}
+    for r in rows:
+        key = r[partition_col] if partition_col else None
+        counts[key] = counts.get(key, 0) + int(r["n_rows"])
+    return counts
 
 
 def commit_lineage(
@@ -370,9 +416,9 @@ def compact_sinks(
       or new, both complete; re-running converges);
     - per-sink row counts re-verified against the manifest BEFORE the swap
       — a compaction that would change row counts fails loudly; the verify
-      pass is ONE scan of the rewritten tmp output that also yields the
-      refreshed per-file lineage (total data read: old files once for the
-      rewrite, new files once for the gate);
+      pass is the footer lineage pass over the rewritten tmp output, which
+      also yields the refreshed per-file lineage (data read once, for the
+      rewrite; the gate reads only footers);
     - manifest per-file lineage refreshed for the rewritten sinks.
 
     Returns {"compacted": {key: {files_before, files_after, rows}},
@@ -413,7 +459,9 @@ def compact_sinks(
 
     # plan keys are the layout's spelling, so the null sink is NULL_SINK:
     # no isin or equi-join on the raw (null) column could match it
-    targets = spark.createDataFrame(sorted(plan.items()), ["_key", "_n_buckets"])
+    targets = spark.createDataFrame(
+        pa.table({"_key": list(plan), "_n_buckets": list(plan.values())})
+    )
     src = (
         spark.read.parquet(path)
         .withColumn(

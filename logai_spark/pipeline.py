@@ -15,7 +15,10 @@ This is the north_star flow (BASELINE.json): Common-Crawl-style pages
 `parse_route_aggregate`, the one post-mining tail that each streaming
 micro-batch (streaming/pipeline.py) runs too. The tail's actions are the
 routed write, the aggregate write, one per-sink rollup collect and the
-write-audit commit. Stage boundaries can checkpoint via
+write-audit commit, whose one Spark job is the lineage sidecar write (the
+footers are listed, read and summed on the driver). The language dimension
+is a JVM local relation, so the tail starts no Python worker outside the
+fused extract+match stage. Stage boundaries can checkpoint via
 operators.route.checkpoint for idempotent resume.
 """
 
@@ -24,6 +27,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -162,7 +166,11 @@ def pages_to_lines(pages: DataFrame) -> DataFrame:
 
 
 def lang_dimension(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(LANG_DIM, ["lang", "lang_name", "script"])
+    """:data:`LANG_DIM` as a JVM local relation: built from an Arrow table
+    it plans as a ``LocalTableScan`` and starts no Python worker, where a
+    Python-list ``createDataFrame`` runs a PythonRDD stage per use."""
+    cols = [list(c) for c in zip(*LANG_DIM)]
+    return spark.createDataFrame(pa.table(cols, names=["lang", "lang_name", "script"]))
 
 
 def verify_routed_write(
@@ -177,8 +185,9 @@ def verify_routed_write(
     fail HERE, not get certified by its own manifest. Returns the manifest.
 
     The written counts come from route.commit_lineage's lineage pass over
-    the parquet footers (route.footer_lineage_scan): metadata reads, never
-    a row scan."""
+    the parquet footers (route.footer_lineage_scan): metadata reads on the
+    driver, never a row scan. Below the pass's driver threshold its one
+    Spark job is the ``_lineage_files`` sidecar write."""
     return commit_lineage(spark, routed_path, "route", partition_col, expected)
 
 

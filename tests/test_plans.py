@@ -83,6 +83,30 @@ def test_routed_sink_partition_pruning(spark, tmp_path):
     assert pruned.count() == 60
 
 
+def test_tail_side_tables_run_no_python_worker(spark, tmp_path):
+    """The pipeline tail's driver-side tables enter Spark as JVM local
+    relations: the language dimension starts no Python worker, and the
+    write-audit commit of a small routed layout is one Spark job (the
+    sidecar write)."""
+    from logai_spark.operators.route import commit_lineage, route_to_sinks
+    from logai_spark.pipeline import lang_dimension
+
+    qe = lang_dimension(spark)._jdf.queryExecution()
+    assert "LocalTableScan" in qe.executedPlan().toString()
+    assert "PythonRDD" not in qe.toRdd().toDebugString()
+
+    pdf = pd.DataFrame({"template_id": ["a"] * 40 + ["b"] * 60, "x": range(100)})
+    path = str(tmp_path / "sinks")
+    route_to_sinks(spark.createDataFrame(pdf), path)
+    sc = spark.sparkContext
+    sc.setJobGroup("commit_lineage_jobs", "one-job commit")
+    try:
+        commit_lineage(spark, path, "route", "template_id", {"a": 40, "b": 60})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("commit_lineage_jobs")) == 1
+
+
 def test_aqe_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
