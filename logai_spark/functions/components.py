@@ -22,11 +22,12 @@ Algorithm: iterative *hash-min label propagation with pointer jumping*
   non-increasing, so "changed" = ``new < old`` on the already-joined row —
   no extra join).
 
-Per-round cost is one edge-table shuffle + one label-table shuffle; each
-round's result is localCheckpoint()ed so the lineage (and therefore the
-plan) stays O(1) deep regardless of round count. Duplicate clusters have
-tiny diameters in practice (2-4), so 2-3 rounds is typical; the driver only
-ever collects one scalar per round.
+Per-round cost is one edge-table shuffle + one label-table shuffle inside
+one checkpoint action (``session.cut_lineage``), so the lineage (and
+therefore the plan) stays O(1) deep regardless of round count. The round's
+changed-label count is a ``DataFrame.observe`` metric of that same action —
+no extra job. Duplicate clusters have tiny diameters in practice (2-4), so
+2-3 rounds is typical.
 
 Determinism: min-aggregation over ids — byte-identical output at any
 partitioning or worker count.
@@ -34,7 +35,7 @@ partitioning or worker count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from logai_spark.session import cut_lineage
@@ -45,7 +46,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 30,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(id, component) for every node appearing in ``edges``; ``component``
     is the MINIMUM node id in the node's connected component (stable,
@@ -57,7 +57,7 @@ def connected_components(
         .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
         .distinct()
     )
-    sym = cut_lineage(sym, checkpoint)
+    sym = cut_lineage(sym)
     labels = sym.select(F.col("_s").alias("id")).distinct().withColumn(
         "label", F.col("id")
     )
@@ -84,9 +84,10 @@ def connected_components(
                 F.least("label", F.coalesce("_llabel", "label")).alias("label"),
             )
         )
-        jumped = cut_lineage(jumped, checkpoint)
-        n_changed = jumped.filter(F.col("label") < F.col("_old")).count()
-        labels = jumped.select("id", "label")
+        obs = Observation()
+        metric = F.count_if(F.col("label") < F.col("_old")).alias("n")
+        labels = cut_lineage(jumped.observe(obs, metric)).select("id", "label")
+        n_changed = obs.get["n"]
         if n_changed == 0:
             break
     if n_changed > 0:

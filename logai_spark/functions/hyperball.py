@@ -23,7 +23,9 @@ Spark shape — registers as THIN ROWS, not arrays:
   rows.
 - per-round tables checkpoint (reliable dir if configured, local
   otherwise) exactly like domain_pagerank: without truncation the plan
-  doubles per round.
+  doubles per round. The checkpointed state is (node, harmonic, est), so
+  each round computes one estimate (the new one) and one join; the
+  previous round's estimate rides along instead of being recomputed.
 
 Determinism is the point: register index and rho derive from md5(node)
 (index = first 32 hash bits mod m; rho = trailing zeros of the second 32
@@ -89,7 +91,6 @@ def hyperball_harmonic(
     edges: DataFrame,
     p: int = 4,
     iters: int = 5,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(domain, harmonic) after ``iters`` HyperBall rounds over the
     IN-ball (edges point src -> dst; harmonic centrality counts nodes that
@@ -108,12 +109,11 @@ def hyperball_harmonic(
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    e = cut_lineage(e, checkpoint)
-    nodes = cut_lineage(nodes, checkpoint)
+    e = cut_lineage(e)
+    nodes = cut_lineage(nodes)
 
     regs = _init_registers(nodes, m)
-    prev = _estimate(regs, m)
-    h = nodes.select("node", F.lit(0.0).alias("harmonic"))
+    h = _estimate(regs, m).select("node", F.lit(0.0).alias("harmonic"), "est")
     for t in range(1, iters + 1):
         nbr = e.join(regs, regs["node"] == e["src"]).select(
             F.col("dst").alias("node"), "reg", "rho"
@@ -121,21 +121,17 @@ def hyperball_harmonic(
         regs = (
             regs.unionByName(nbr).groupBy("node", "reg").agg(F.max("rho").alias("rho"))
         )
-        regs = cut_lineage(regs, checkpoint)
-        cur = _estimate(regs, m)
-        h = (
-            h.join(prev.withColumnRenamed("est", "_pe"), "node")
-            .join(cur.withColumnRenamed("est", "_ce"), "node")
-            .select(
+        regs = cut_lineage(regs)
+        h = cut_lineage(
+            h.join(_estimate(regs, m).withColumnRenamed("est", "_ce"), "node").select(
                 "node",
                 (
                     F.col("harmonic")
-                    + F.greatest(F.col("_ce") - F.col("_pe"), F.lit(0.0)) / t
+                    + F.greatest(F.col("_ce") - F.col("est"), F.lit(0.0)) / t
                 ).alias("harmonic"),
+                F.col("_ce").alias("est"),
             )
         )
-        h = cut_lineage(h, checkpoint)
-        prev = cur
     return h.select(F.col("node").alias("domain"), "harmonic")
 
 

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from logai_spark.session import cut_lineage
+
 # MinHash parameters: k permutations via (a*h + b) mod P over 32-bit md5-based
 # token hashes. P is prime and < 2^31 so a*h fits in int64 exactly (matches
 # DuckDB BIGINT arithmetic). Coefficients are fixed odd constants, not RNG.
@@ -458,8 +460,12 @@ def lsh_duplicate_pairs(
     clusters (members merely share hot shingles' min-hashes; their actual
     Jaccard is low). Identical-text mass belongs to exact_dedup upstream.
     The cap bounds per-bucket work at cap^2 while leaving real (small)
-    near-dup clusters intact; None preserves exact banding semantics."""
-    bandtbl = _band_table(df, id_col, text_col, bands, rows_per_band, shingle_n)
+    near-dup clusters intact; None preserves exact banding semantics.
+
+    Eager, like ``connected_components``: the band table is materialized
+    once, since the hot-bucket count, the anti-join and both join sides
+    would each recompute its signatures and explode."""
+    bandtbl = cut_lineage(_band_table(df, id_col, text_col, bands, rows_per_band, shingle_n))
     if max_band_bucket is not None:
         # same skew-safe shape as the ngram df-cap: partial-agg count of
         # the few hot buckets + shuffle-hash anti-join that streams the

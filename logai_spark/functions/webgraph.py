@@ -13,9 +13,9 @@ commoncrawl.org host-rank dataset is exactly this). Two operators:
 - :func:`domain_pagerank` — fixed-iteration power method on those edges.
   The rank vector is |domains|-sized (millions at web scale, KBs here) and
   BROADCASTS to the edge table every iteration; each iteration is one
-  shuffle of the edge table keyed dst (partial-agg combined). Dangling
-  mass and the node count are 1-row aggregates cross-joined back —
-  nothing corpus-sized ever hits the driver.
+  shuffle of the edge table keyed dst (partial-agg combined). The node
+  count and the dangling mass are scalars observed on the checkpoint
+  actions — nothing corpus-sized is ever collected.
 
 Iterations are unrolled (default 5), damping 0.85, classic formula
 
@@ -31,7 +31,7 @@ has no link-graph analog.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from logai_spark.session import cut_lineage
 
@@ -109,62 +109,56 @@ def domain_pagerank(
     edges: DataFrame,
     iters: int = 5,
     damping: float = 0.85,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(domain, rank) after ``iters`` power iterations. Scale shape: the
     big table (edges) is shuffled once per iteration keyed dst with
-    map-side combine; ranks / outweights / scalars are broadcast-sized.
+    map-side combine; the rank vector is broadcast-sized.
 
-    Each iteration's rank vector is checkpointed: ``ranks`` feeds BOTH the
-    contribution join and the dangling-mass aggregate, so without lineage
-    truncation the logical plan doubles per iteration (~2^iters subtrees —
-    iters=10 already stalls analysis). Reliable-vs-local policy:
+    The loop invariants are computed once per call: each edge carries its
+    source's out-weight, and each node its dangling flag, in one
+    checkpoint each. The node count and the dangling mass are scalars
+    observed on checkpoint actions the loop runs anyway (the node table's,
+    then each iteration's rank vector), so no iteration spends a job or a
+    cross join on them. Reliable-vs-local policy:
     :func:`logai_spark.session.cut_lineage`."""
     edges = edges.select("src", "dst", F.col("n_links").cast("double").alias("w"))
-    nodes = (
-        edges.select(F.col("src").alias("domain"))
-        .unionByName(edges.select(F.col("dst").alias("domain")))
-        .distinct()
-    )
-    # nodes is re-read every iteration (new-rank left join) and edges
-    # twice (contrib + outw already derived); one materialization stops
-    # the href-extraction scan re-running per iteration.
-    edges = cut_lineage(edges, checkpoint)
-    nodes = cut_lineage(nodes, checkpoint)
-    n_tbl = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
     outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
-
-    ranks = nodes.crossJoin(F.broadcast(n_tbl)).select(
-        "domain", (F.lit(1.0) / F.col("n")).alias("rank")
+    edges = cut_lineage(edges.join(outw, "src"))
+    # a node is dangling (no out-links) when it only ever appears as dst
+    nodes = (
+        edges.select(F.col("src").alias("domain"), F.lit(False).alias("_dst"))
+        .unionByName(edges.select(F.col("dst").alias("domain"), F.lit(True).alias("_dst")))
+        .groupBy("domain")
+        .agg(F.bool_and("_dst").alias("dangling"))
     )
+    obs = Observation()
+    nodes = cut_lineage(
+        nodes.observe(obs, F.count(F.lit(1)).alias("n"), F.count_if("dangling").alias("nd"))
+    )
+    n, nd = obs.get["n"], obs.get["nd"]
+    if n == 0:
+        return nodes.select("domain", F.lit(0.0).alias("rank"))
     d = float(damping)
+    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+    dm = nd * (1.0 / n)
     for _ in range(iters):
         contrib = (
-            edges.join(F.broadcast(ranks), edges["src"] == ranks["domain"])
-            .join(F.broadcast(outw), "src")
+            edges.join(F.broadcast(ranks.select(F.col("domain").alias("src"), "rank")), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("w") / F.col("outw")).alias("c"))
             .withColumnRenamed("dst", "domain")
         )
-        dangling = (
-            ranks.join(outw, ranks["domain"] == outw["src"], "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
+        rank = F.lit((1.0 - d) / n) + F.lit(d) * (
+            F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dm / n)
         )
-        ranks = (
+        obs = Observation()
+        ranks = cut_lineage(
             nodes.join(F.broadcast(contrib), "domain", "left")
-            .crossJoin(F.broadcast(n_tbl))
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "domain",
-                (
-                    F.lit((1.0 - d)) / F.col("n")
-                    + F.lit(d)
-                    * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("dm") / F.col("n"))
-                ).alias("rank"),
-            )
+            .select("domain", "dangling", rank.alias("rank"))
+            .observe(obs, F.sum(F.when(F.col("dangling"), F.col("rank"))).alias("dm"))
         )
-        ranks = cut_lineage(ranks, checkpoint)
-    return ranks
+        dm = obs.get["dm"] or 0.0
+    return ranks.select("domain", "rank")
 
 
 def pagerank_oracle_sql(

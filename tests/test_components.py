@@ -64,6 +64,36 @@ def test_cc_tolerates_self_loops_and_dups(spark):
     _check(spark, edges)
 
 
+def test_cc_convergence_count_runs_no_count_job(spark, monkeypatch):
+    """Each round's changed-label count is observed on the round's own
+    checkpoint action; no round runs a separate DataFrame.count()."""
+    rng = random.Random(3)
+    edges = [(rng.randrange(120), rng.randrange(120)) for _ in range(90)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+
+    def _no_count(self):
+        raise AssertionError("DataFrame.count() called")
+
+    # the concrete class: pyspark.sql.DataFrame is its abstract base
+    monkeypatch.setattr(type(df), "count", _no_count)
+    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
+    assert got == _uf_components(edges)
+
+
+def test_empty_inputs_stay_empty(spark):
+    assert connected_components(spark.createDataFrame([], "id_a long, id_b long")).collect() == []
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    assert dup_clusters(docs).collect() == []
+
+
+def test_dup_clusters_only_short_or_null_docs_are_singletons(spark):
+    docs = spark.createDataFrame(
+        [(1, "hi"), (2, "hi"), (3, None), (4, "two words")], "doc_id long, text string"
+    )
+    got = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(docs).collect()}
+    assert got == {1: 1, 2: 2, 3: 3, 4: 4}
+
+
 @pytest.fixture(scope="module")
 def dup_docs(spark):
     # long docs so a one-word perturbation keeps shingle-Jaccard ~0.9 and

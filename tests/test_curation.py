@@ -317,6 +317,33 @@ def test_lsh_hot_band_bucket_cap(spark):
     assert uncapped == 50 * 49 // 2 + 1
 
 
+@pytest.mark.parametrize("cap, n_pairs", [(None, 12 * 11 // 2 + 16 * 3), (10, 16 * 3)])
+def test_lsh_band_table_built_once(spark, cap, n_pairs):
+    """The band table feeds the hot-bucket count, the anti-join probe and
+    both sides of the self-join; it is materialized once, so the plan
+    that pairs it holds no band explode (Generate) at all."""
+    import contextlib
+    import io
+
+    from logai_spark.functions.textops import lsh_duplicate_pairs
+
+    hot = "the same boilerplate page text repeated on every mirror of the site"
+    rows = [(i, hot) for i in range(12)]  # one band bucket of 12 > cap
+    for f in range(16):  # 16 families of 3 identical docs
+        txt = " ".join(f"fam{f}w{j}" for j in range(10))
+        rows += [(100 + 3 * f + c, txt) for c in range(3)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    assert df.count() == 60
+
+    pairs = lsh_duplicate_pairs(df, bands=4, rows_per_band=2, max_band_bucket=cap)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        pairs.explain("formatted")
+    tree = buf.getvalue().split("\n\n")[0]
+    assert "Generate (" not in tree
+    assert pairs.count() == n_pairs
+
+
 def test_html_extract_full_chain(spark):
     from logai_spark.functions.curation import html_extract
 

@@ -92,3 +92,8 @@ def test_hyperball_deterministic_across_runs(spark):
     a = sorted((r.domain, r.harmonic) for r in hyperball_harmonic(df, p=4, iters=3).collect())
     b = sorted((r.domain, r.harmonic) for r in hyperball_harmonic(df, p=4, iters=3).collect())
     assert a == b
+
+
+def test_hyperball_empty_edges_stay_empty(spark):
+    df = spark.createDataFrame([], "src string, dst string")
+    assert hyperball_harmonic(df, p=4, iters=3).collect() == []

@@ -135,6 +135,40 @@ def test_pagerank_matches_numpy_power_iteration(spark):
         assert got[d_] == pytest.approx(rank[idx[d_]], rel=1e-9), d_
 
 
+def _jobs(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pagerank_iteration_job_budget(spark):
+    """The loop invariants (out-weights, node count) are computed once per
+    call and the dangling mass is observed on each iteration's checkpoint,
+    so two more iterations cost at most 10 more jobs."""
+    edges = spark.createDataFrame(
+        [Row(src=f"d{i}", dst=f"d{(i * 7 + k) % 15}", n_links=k + 1)
+         for i in range(12) for k in range(3)]
+    )
+    j2 = _jobs(spark, lambda: domain_pagerank(edges, iters=2).collect())
+    j4 = _jobs(spark, lambda: domain_pagerank(edges, iters=4).collect())
+    assert j4 - j2 <= 10, (j2, j4)
+
+
+def test_pagerank_empty_edges_stay_empty(spark):
+    edges = spark.createDataFrame([], "src string, dst string, n_links long")
+    assert domain_pagerank(edges).collect() == []
+
+
 def test_hits_matches_numpy_iteration(spark):
     """domain_hits == dense numpy HITS with L1 normalization, same edge
     fixture family as the pagerank parity test (Kleinberg 1999)."""
