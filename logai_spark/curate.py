@@ -22,6 +22,15 @@ Scale shape per stage (each documented at its operator):
   PII scrub         row-local regexp codegen
   packing           per-source applyInPandas over (id, size) only
 
+The real filters that must run before dedup keeper election (URL blocklist,
+domain prior, URL dedup) drop rows. Every later drop is a keep flag on a thin
+(id, lang, quality, flags) ledger. The ledger is declared once:
+``LEDGER_CUTS`` lists the keep flags in cut order with their manifest count
+keys, ``LEDGER_STATS`` the hygiene stat columns. The cut, the per-stage
+counts, a resume from the checkpointed ledger and the columns dropped from
+the written corpus all read that declaration against the columns the ledger
+actually has. A stage that did not run writes no column and gets no count.
+
 Determinism: every stage is a deterministic function of the input table, so
 re-running into the same output reproduces byte-identical parquet (modulo
 file count) and an identical manifest.
@@ -34,7 +43,7 @@ import json
 import os
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logai_spark.functions.textops import (
@@ -47,6 +56,34 @@ from logai_spark.operators.route import manifest_of, write_manifest
 
 # the ledger's commit record: the config hash a resume must match
 LEDGER_META = "_ledger_meta.json"
+
+# The flag ledger, declared once. (keep column, manifest count key) in cut
+# order: a stage that runs writes its keep column and a stage that did not
+# writes none, so the cut, the per-stage counts and a resume read stage
+# presence off the ledger's columns. Each count is the docs that survive
+# that cut and every cut before it.
+LEDGER_CUTS = (
+    ("_keep_exact", "after_exact_dedup"),
+    ("_keep_near", "after_near_dup"),
+    ("_keep_rep", "after_repetition_filter"),
+    ("_keep_repfull", "after_repetition_full"),
+    ("_c4_keep", "after_line_filter"),
+    ("_keep_gopher", "after_gopher_rules"),
+    ("_keep_zlib", "after_zlib_filter"),
+    ("_keep_decon", "after_decontaminate"),
+    ("_keep_cls", "after_classifier"),
+    ("_keep_quality", "after_quality_floor"),
+)
+# (per-doc stat column, manifest count key): what each text-hygiene stage
+# removed or changed, summed over the ledger
+LEDGER_STATS = (
+    ("_lines_removed", "filtered_lines_removed"),
+    ("_norm_changed", "normalized_docs"),
+    ("_bp_removed", "boilerplate_lines_removed"),
+    ("_pd_removed", "duplicate_paragraphs_removed"),
+    ("_ss_removed", "substring_tokens_removed"),
+)
+LEDGER_COLUMNS = tuple(col for col, _ in LEDGER_CUTS + LEDGER_STATS)
 
 
 @dataclass(frozen=True)
@@ -162,6 +199,37 @@ class CurationConfig:
     source_col: str = "source"
 
 
+def _cuts(columns: list[str]) -> list[tuple[str, Column]]:
+    """(count key, running AND of the keep flags so far) for every
+    :data:`LEDGER_CUTS` column present in ``columns``, in cut order."""
+    out, keep = [], None
+    for col, key in LEDGER_CUTS:
+        if col in columns:
+            keep = F.col(col) if keep is None else keep & F.col(col)
+            out.append((key, keep))
+    return out
+
+
+def _flag(
+    flags: DataFrame, ids: DataFrame, col: str, id_col: str, listed: bool = True
+) -> DataFrame:
+    """Left-join the keep flag ``col`` onto the ledger: ``listed`` for the
+    ids in ``ids``, ``not listed`` for every other row — only the ids a
+    stage singles out (keepers, or drops) ever move."""
+    return flags.join(
+        ids.select(id_col, F.lit(listed).alias(col)), id_col, "left"
+    ).withColumn(col, F.coalesce(col, F.lit(not listed)))
+
+
+def _files_fp(df: DataFrame, tag: str, fallback: str) -> str:
+    """``tag`` + the sorted file set behind ``df``'s scan, or ``fallback``
+    for a frame that cannot list one."""
+    try:
+        return f"{tag}{sorted(df.inputFiles())}"
+    except Exception:
+        return fallback
+
+
 def run_curation(
     spark: SparkSession,
     docs: DataFrame,
@@ -179,10 +247,12 @@ def run_curation(
     #    hash-equal, so exact dedup catches more). Both rewrite text_col in
     #    place and leave a per-doc stat column that rides the SAME ledger
     #    scan as everything else (no extra corpus pass for accounting).
+    #    The real pre-ledger filters each count their input under `label`,
+    #    then move `label` on to name their own output.
     # ------------------------------------------------------------------
-    pre_cols: list[str] = []
-    bl_df = None
+    bl_df = ds_df = None
     pre_counts: dict[str, int] = {}
+    label = "input"
     if c.url_blocklist:
         from logai_spark.functions.textops import url_filter
 
@@ -192,11 +262,11 @@ def run_curation(
         # shuffle (K broadcast suffix joins); the one extra action is a
         # column-pruned pre-filter count for the manifest.
         bl_df = spark.read.parquet(c.url_blocklist)
-        pre_counts["input"] = docs.count()
+        pre_counts[label] = docs.count()
         docs = url_filter(
             docs, bl_df, url_col=c.url_col, id_col=c.id_col, action="drop"
         )
-    ds_df = None
+        label = "after_url_filter"
     if c.domain_scores and (
         c.domain_min_harmonic is not None or c.domain_min_pagerank is not None
     ):
@@ -204,7 +274,7 @@ def run_curation(
         # broadcast LEFT join on the source domain + a null-passing floor
         # filter — zero corpus shuffle, unscored domains survive.
         ds_df = spark.read.parquet(c.domain_scores)
-        pre_counts["after_url_filter" if c.url_blocklist else "input"] = docs.count()
+        pre_counts[label] = docs.count()
         sel = ["domain"]
         cond = F.lit(True)
         if c.domain_min_harmonic is not None:
@@ -223,17 +293,14 @@ def run_curation(
             .filter(F.col("_dsc.domain").isNull() | cond)
             .drop(*sel)
         )
+        label = "after_domain_filter"
     if c.url_dedup:
         from logai_spark.functions.textops import url_dedup as _url_dedup
 
         # cheapest dedup first (FineWeb ordering): keeper election is one
         # partial-agg min/max(struct) over (normalized url, ts, id) — no
         # text moves — then the corpus reduces via a semi-join on the id.
-        pre_counts[
-            "after_domain_filter"
-            if ds_df is not None
-            else ("after_url_filter" if c.url_blocklist else "input")
-        ] = docs.count()
+        pre_counts[label] = docs.count()
         sel = [c.id_col, c.url_col] + ([c.url_ts_col] if c.url_ts_col else [])
         keep = _url_dedup(
             docs.select(*sel), url_col=c.url_col, id_col=c.id_col,
@@ -247,6 +314,7 @@ def run_curation(
             .filter(F.col("_uk").isNotNull() | F.col(c.url_col).isNull())
             .drop("_uk")
         )
+        label = "after_url_dedup"
     if c.line_filter:
         from logai_spark.functions.webclean import line_filter
 
@@ -268,7 +336,6 @@ def run_curation(
             (F.col("n_lines") - F.col("n_kept_lines")).alias("_lines_removed"),
             F.col("c4_keep").alias("_c4_keep"),
         )
-        pre_cols.extend(["_lines_removed", "_c4_keep"])
     if c.normalize:
         from logai_spark.functions.curation import normalize_text_expr
 
@@ -279,7 +346,6 @@ def run_curation(
             .drop(c.text_col)
             .withColumnRenamed("_nt", c.text_col)
         )
-        pre_cols.append("_norm_changed")
     if c.boilerplate_max_df is not None:
         from logai_spark.functions.curation import boilerplate_rm
 
@@ -293,7 +359,6 @@ def run_curation(
             c.text_col,
             F.col("n_removed").alias("_bp_removed"),
         )
-        pre_cols.append("_bp_removed")
     if c.paragraph_dedup:
         from logai_spark.functions.webclean import paragraph_dedup
 
@@ -309,7 +374,6 @@ def run_curation(
             c.text_col,
             (F.col("n_paragraphs") - F.col("n_kept")).alias("_pd_removed"),
         )
-        pre_cols.append("_pd_removed")
     if c.substring_window:
         from logai_spark.functions.webclean import substring_dedup
 
@@ -326,7 +390,10 @@ def run_curation(
             c.text_col,
             (F.col("n_tokens") - F.col("n_kept")).alias("_ss_removed"),
         )
-        pre_cols.append("_ss_removed")
+
+    # the hygiene stages' ledger columns (stats + the C4 verdict) ride the
+    # ledger-seeding scan in the order the stages added them
+    pre_cols = [col for col in docs.columns if col in LEDGER_COLUMNS]
 
     # ------------------------------------------------------------------
     # Materialization barrier after the text-REWRITING hygiene/pre-dedup
@@ -383,306 +450,207 @@ def run_curation(
     # ledger. In-memory inputs list no files and fall back to schema-only
     # (documented residual: such frames are test fixtures, not production
     # sources). Failure direction is always a spurious recompute, never a
-    # wrong resume.
-    try:
-        input_fp = f"{docs.schema.json()}:{sorted(docs.inputFiles())}"
-    except Exception:
-        input_fp = docs.schema.json()
-    # the decontamination REFERENCE is an input too: fingerprint its file
-    # set so a refreshed benchmark at the same path recomputes the ledger
-    ref_df = None
-    if c.decontaminate_ref:
-        ref_df = spark.read.parquet(c.decontaminate_ref)
-        try:
-            input_fp += f":ref={sorted(ref_df.inputFiles())}"
-        except Exception:
-            input_fp += f":ref={c.decontaminate_ref}"
-    # the domain blocklist is an input too
-    if bl_df is not None:
-        try:
-            input_fp += f":bl={sorted(bl_df.inputFiles())}"
-        except Exception:
-            input_fp += f":bl={c.url_blocklist}"
-    # the domain-scores table is an input too: a refreshed rank snapshot
-    # at the same path must recompute the ledger
-    if ds_df is not None:
-        try:
-            input_fp += f":ds={sorted(ds_df.inputFiles())}"
-        except Exception:
-            input_fp += f":ds={c.domain_scores}"
-    # the classifier's positive reference corpus is an input too
-    cls_ref_df = None
-    if c.classifier_ref:
-        cls_ref_df = spark.read.parquet(c.classifier_ref)
-        try:
-            input_fp += f":clsref={sorted(cls_ref_df.inputFiles())}"
-        except Exception:
-            input_fp += f":clsref={c.classifier_ref}"
+    # wrong resume. The side tables (decontamination reference, domain
+    # blocklist, domain scores, classifier reference) are inputs too: a
+    # refreshed table at the same path recomputes the ledger.
+    ref_df = spark.read.parquet(c.decontaminate_ref) if c.decontaminate_ref else None
+    cls_ref_df = spark.read.parquet(c.classifier_ref) if c.classifier_ref else None
+    input_fp = docs.schema.json() + _files_fp(docs, ":", "")
+    for tag, side, path in (
+        ("ref", ref_df, c.decontaminate_ref),
+        ("bl", bl_df, c.url_blocklist),
+        ("ds", ds_df, c.domain_scores),
+        ("clsref", cls_ref_df, c.classifier_ref),
+    ):
+        if side is not None:
+            input_fp += _files_fp(side, f":{tag}=", f":{tag}={path}")
     cfg_hash = hashlib.md5(
         json.dumps(
             {"cfg": stage_cfg, "input": input_fp}, sort_keys=True, default=str
         ).encode()
     ).hexdigest()
-    resumed = False
-    if c.resume and os.path.exists(os.path.join(ledger_dir, "_SUCCESS")):
-        meta = manifest_of(output, LEDGER_META)
-        resumed = meta is not None and meta.get("config_hash") == cfg_hash
-    if resumed:
-        flags = spark.read.parquet(ledger_dir)
-        pre_cols = [
-            x
-            for x in (
-                "_lines_removed",
-                "_c4_keep",
-                "_norm_changed",
-                "_bp_removed",
-                "_pd_removed",
-                "_ss_removed",
-            )
-            if x in flags.columns
-        ]
-        try:
-            return _finish_curation(
-                spark, docs, flags, pre_cols, output, c, True,
-                pre_counts=pre_counts,
-            )
-        finally:
-            if barrier is not None:
-                barrier.unpersist()
-
-    # 1. exact dedup: keeper = min id per identical text. hash_key shuffles
-    #    16-byte digests, not document bodies (textops.exact_dedup docstring)
-    keepers = exact_dedup(
-        docs, [c.text_col], id_col=c.id_col, hash_key=True
-    ).select(F.col("keeper_id").alias(c.id_col), F.lit(True).alias("_keep_exact"))
-    # 2. repetition ceiling (row-local — computed in the SAME scan that
-    #    seeds the ledger, with lang carried through keep_cols: the ledger
-    #    base costs one corpus scan + one join to the dedup keepers, never
-    #    an extra id-keyed shuffle to glue stats back on). The optional
-    #    Gopher rule bundle is row-local too, so it rides the same scan:
-    #    gopher_rules' verdict column joins the keep_cols, its stat columns
-    #    never leave the projection.
-    base_src = docs
-    gopher_cols: list[str] = []
-    if c.gopher:
-        from logai_spark.functions.webclean import gopher_rules
-
-        base_src = gopher_rules(
-            docs,
-            text_col=c.text_col,
-            min_words=c.gopher_min_words,
-            min_stopword_hits=c.gopher_min_stopwords,
-        ).select(*docs.columns, "gopher_keep")
-        gopher_cols = ["gopher_keep"]
-    zlib_cols: list[str] = []
-    if c.zlib_min is not None:
-        from logai_spark.functions.curation import compression_ratio
-
-        # row-local like gopher_rules: the ratio is consumed here, only
-        # the boolean verdict rides the ledger
-        base_src = compression_ratio(base_src, c.text_col).select(
-            *base_src.columns,
-            (F.col("zlib_ratio") >= c.zlib_min).alias("zlib_keep"),
-        )
-        zlib_cols = ["zlib_keep"]
-    repfull_cols: list[str] = []
-    if c.repetition_full:
-        from logai_spark.functions.webclean import gopher_repetition
-
-        # the full App. A.1.2 suite is row-local like gopher_rules, so it
-        # chains into the same ledger-seeding scan: text and the other
-        # verdicts ride keep_cols, only the final boolean survives
-        carried = [col for col in base_src.columns if col != c.id_col]
-        base_src = gopher_repetition(
-            base_src, text_col=c.text_col, id_col=c.id_col, keep_cols=carried
-        ).select(c.id_col, *carried, "repetition_keep")
-        repfull_cols = ["repetition_keep"]
-    # quality is row-local, so it rides the SAME ledger-seeding scan and
-    # stage 4 below runs entirely on the thin ledger — no corpus re-read,
-    # no survivors semi-join against the persisted text
-    from logai_spark.functions.textops import quality_score
-
-    base_src = quality_score(base_src, c.text_col).select(
-        *base_src.columns, "quality"
+    resumed = (
+        c.resume
+        and os.path.exists(os.path.join(ledger_dir, "_SUCCESS"))
+        and (manifest_of(output, LEDGER_META) or {}).get("config_hash") == cfg_hash
     )
-    flags = (
-        repetition_stats(
-            base_src, text_col=c.text_col, id_col=c.id_col,
-            keep_cols=[c.lang_col, "quality", *pre_cols, *gopher_cols,
-                       *zlib_cols, *repfull_cols],
-        )
-        .select(
-            c.id_col,
-            c.lang_col,
-            F.col("quality"),
-            *pre_cols,
-            (F.col("top_bigram_frac") <= c.max_top_bigram_frac).alias("_keep_rep"),
-            *(
-                [F.col("gopher_keep").alias("_keep_gopher")]
-                if c.gopher
-                else []
-            ),
-            *(
-                [F.col("zlib_keep").alias("_keep_zlib")]
-                if c.zlib_min is not None
-                else []
-            ),
-            *(
-                [F.col("repetition_keep").alias("_keep_repfull")]
-                if c.repetition_full
-                else []
-            ),
-        )
-        .join(keepers, c.id_col, "left")
-        .withColumn("_keep_exact", F.coalesce("_keep_exact", F.lit(False)))
-    )
+    if not resumed:
+        # 1. exact dedup: keeper = min id per identical text. hash_key
+        #    shuffles 16-byte digests, not document bodies
+        #    (textops.exact_dedup docstring)
+        keepers = exact_dedup(
+            docs, [c.text_col], id_col=c.id_col, hash_key=True
+        ).select(F.col("keeper_id").alias(c.id_col))
+        # 2. repetition ceiling (row-local — computed in the SAME scan that
+        #    seeds the ledger, with lang carried through keep_cols: the
+        #    ledger base costs one corpus scan + one join to the dedup
+        #    keepers, never an extra id-keyed shuffle to glue stats back
+        #    on). The optional Gopher rule bundle, zlib floor and full
+        #    repetition suite are row-local too, so they ride the same
+        #    scan: each names its verdict `_keep_*` and adds it to
+        #    `verdicts`, its stat columns never leave the projection.
+        base_src = docs
+        verdicts: list[str] = []
+        if c.gopher:
+            from logai_spark.functions.webclean import gopher_rules
 
-    # 2b. cross-corpus decontamination: absolute per-doc verdict (row-
-    #     independent of the other stages, like gopher); only the FLAGGED
-    #     ids join the ledger — everything else defaults to keep
-    if c.decontaminate_ref:
-        from logai_spark.functions.textops import cross_near_dup
+            base_src = gopher_rules(
+                docs,
+                text_col=c.text_col,
+                min_words=c.gopher_min_words,
+                min_stopword_hits=c.gopher_min_stopwords,
+            ).select(*docs.columns, F.col("gopher_keep").alias("_keep_gopher"))
+            verdicts.append("_keep_gopher")
+        if c.zlib_min is not None:
+            from logai_spark.functions.curation import compression_ratio
 
-        hits = (
-            cross_near_dup(
+            base_src = compression_ratio(base_src, c.text_col).select(
+                *base_src.columns,
+                (F.col("zlib_ratio") >= c.zlib_min).alias("_keep_zlib"),
+            )
+            verdicts.append("_keep_zlib")
+        if c.repetition_full:
+            from logai_spark.functions.webclean import gopher_repetition
+
+            # the full App. A.1.2 suite carries text and the other verdicts
+            # through keep_cols; only its final boolean survives
+            carried = [col for col in base_src.columns if col != c.id_col]
+            base_src = gopher_repetition(
+                base_src, text_col=c.text_col, id_col=c.id_col, keep_cols=carried
+            ).select(
+                c.id_col, *carried, F.col("repetition_keep").alias("_keep_repfull")
+            )
+            verdicts.append("_keep_repfull")
+        # quality is row-local, so it rides the SAME ledger-seeding scan and
+        # stage 4 below runs entirely on the thin ledger — no corpus
+        # re-read, no survivors semi-join against the persisted text
+        from logai_spark.functions.textops import quality_score
+
+        base_src = quality_score(base_src, c.text_col).select(
+            *base_src.columns, "quality"
+        )
+        flags = _flag(
+            repetition_stats(
+                base_src, text_col=c.text_col, id_col=c.id_col,
+                keep_cols=[c.lang_col, "quality", *pre_cols, *verdicts],
+            ).select(
+                c.id_col,
+                c.lang_col,
+                F.col("quality"),
+                *pre_cols,
+                (F.col("top_bigram_frac") <= c.max_top_bigram_frac).alias("_keep_rep"),
+                *verdicts,
+            ),
+            keepers, "_keep_exact", c.id_col,
+        )
+
+        # 2b. cross-corpus decontamination: absolute per-doc verdict (row-
+        #     independent of the other stages, like gopher); only the
+        #     FLAGGED ids join the ledger — everything else defaults to keep
+        if c.decontaminate_ref:
+            from logai_spark.functions.textops import cross_near_dup
+
+            hits = cross_near_dup(
                 docs,
                 ref_df,
                 id_col=c.id_col,
                 text_col=c.text_col,
                 bands=c.lsh_bands,
                 rows_per_band=max(1, c.minhash_k // c.lsh_bands),
+            ).filter("ref_dup")
+            flags = _flag(flags, hits, "_keep_decon", c.id_col, listed=False)
+
+        # 2c. supervised quality classifier: positives = the reference
+        #     corpus, negatives = a deterministic hash-sample of the input
+        #     (the CCNet construction). Training is two bounded bucket-count
+        #     aggregates over the labeled set; scoring is one broadcast join
+        #     + partial-agg sum over the corpus. Absolute per-doc verdict —
+        #     only the DROPPED ids join the ledger.
+        if c.classifier_ref:
+            from logai_spark.functions.selection import quality_classifier
+            from logai_spark.functions.textops import hash_sample
+
+            neg = hash_sample(
+                docs, frac=c.classifier_neg_frac, id_col=c.id_col, salt="clsneg"
             )
-            .filter("ref_dup")
-            .select(c.id_col, F.lit(False).alias("_keep_decon"))
-        )
-        flags = flags.join(hits, c.id_col, "left").withColumn(
-            "_keep_decon", F.coalesce("_keep_decon", F.lit(True))
-        )
-
-    # 2c. supervised quality classifier: positives = the reference corpus,
-    #     negatives = a deterministic hash-sample of the input (the CCNet
-    #     construction). Training is two bounded bucket-count aggregates
-    #     over the labeled set; scoring is one broadcast join + partial-agg
-    #     sum over the corpus. Absolute per-doc verdict — only the DROPPED
-    #     ids join the ledger, everything else defaults to keep.
-    if c.classifier_ref:
-        from logai_spark.functions.selection import quality_classifier
-        from logai_spark.functions.textops import hash_sample
-
-        neg = hash_sample(
-            docs, frac=c.classifier_neg_frac, id_col=c.id_col, salt="clsneg"
-        )
-        labeled = cls_ref_df.select(
-            F.col(c.text_col), F.lit(1).alias("label")
-        ).unionByName(neg.select(F.col(c.text_col), F.lit(0).alias("label")))
-        dropped_cls = (
-            quality_classifier(
+            labeled = cls_ref_df.select(
+                F.col(c.text_col), F.lit(1).alias("label")
+            ).unionByName(neg.select(F.col(c.text_col), F.lit(0).alias("label")))
+            dropped_cls = quality_classifier(
                 docs,
                 labeled,
                 text_col=c.text_col,
                 id_col=c.id_col,
                 buckets=c.classifier_buckets,
                 threshold=c.classifier_threshold,
+            ).filter(~F.col("nb_keep"))
+            flags = _flag(flags, dropped_cls, "_keep_cls", c.id_col, listed=False)
+
+        # 3. optional near-dup cluster resolution among exact-dedup survivors
+        if c.near_dup:
+            from logai_spark.functions.components import dup_clusters, keep_best
+
+            survivors = docs.join(
+                flags.filter("_keep_exact").select(c.id_col), c.id_col, "left_semi"
             )
-            .filter(~F.col("nb_keep"))
-            .select(c.id_col, F.lit(False).alias("_keep_cls"))
-        )
-        flags = flags.join(dropped_cls, c.id_col, "left").withColumn(
-            "_keep_cls", F.coalesce("_keep_cls", F.lit(True))
-        )
-
-    # 3. optional near-dup cluster resolution among exact-dedup survivors
-    if c.near_dup:
-        from logai_spark.functions.components import dup_clusters
-
-        survivors = docs.join(
-            flags.filter("_keep_exact").select(c.id_col), c.id_col, "left_semi"
-        )
-        clusters = dup_clusters(
-            survivors,
-            id_col=c.id_col,
-            text_col=c.text_col,
-            bands=c.lsh_bands,
-            rows_per_band=max(1, c.minhash_k // c.lsh_bands),
-            max_band_bucket=c.lsh_max_band_bucket,
-        )
-        if c.near_dup_keep == "best":
-            # quality-aware retention: the kept member of each cluster is
-            # the highest-quality one (ties to smallest id), not the min
-            # id — mirrors and truncated scrapes usually differ in
-            # quality. Shares components.best_per_cluster (string-id-safe
-            # min_by, no window over cluster members).
-            from logai_spark.functions.components import best_per_cluster
-            from logai_spark.functions.textops import quality_score
-
-            q = quality_score(survivors, c.text_col).select(c.id_col, "quality")
-            winners = best_per_cluster(clusters, q, id_col=c.id_col).select(
-                F.col("keeper_id").alias(c.id_col),
-                F.lit(True).alias("_keep_near"),
+            clusters = dup_clusters(
+                survivors,
+                id_col=c.id_col,
+                text_col=c.text_col,
+                bands=c.lsh_bands,
+                rows_per_band=max(1, c.minhash_k // c.lsh_bands),
+                max_band_bucket=c.lsh_max_band_bucket,
             )
-        else:
-            winners = clusters.filter(
-                F.col(c.id_col) == F.col("cluster_id")
-            ).select(c.id_col, F.lit(True).alias("_keep_near"))
-        flags = flags.join(winners, c.id_col, "left").withColumn(
-            "_keep_near", F.coalesce("_keep_near", F.lit(False))
+            if c.near_dup_keep == "best":
+                # quality-aware retention: the kept member of each cluster
+                # is the highest-quality one (ties to smallest id), not the
+                # min id — mirrors and truncated scrapes usually differ in
+                # quality. keep_best reuses the clusters just mined.
+                winners = keep_best(
+                    survivors, c.id_col, c.text_col, clusters=clusters
+                ).select(F.col("keeper_id").alias(c.id_col))
+            else:
+                winners = clusters.filter(F.col(c.id_col) == F.col("cluster_id"))
+            flags = _flag(flags, winners, "_keep_near", c.id_col)
+
+        # Persist the base ledger BEFORE the quality stage: the repetition
+        # fold and dedup joins must run exactly once. Without this, the
+        # quality branch re-derives the chain on BOTH sides of its
+        # broadcast (cutoff subtree + main side) and again at the final
+        # write — ~4 evaluations of the most expensive row-local expression
+        # in the pipeline.
+        base = flags.persist()
+
+        # 4. per-language quality cut computed over the survivors of 1-3 —
+        #    on the THIN ledger (quality was computed in the seeding scan):
+        #    one per-lang percentile partial agg + a broadcast cutoff join,
+        #    same math as textops.quality_floor, zero corpus re-reads
+        surv = base.filter(_cuts(base.columns)[-1][1]).select(
+            c.id_col, c.lang_col, "quality"
         )
-    else:
-        flags = flags.withColumn("_keep_near", F.col("_keep_exact"))
-
-    # Persist the base ledger BEFORE the quality stage: the repetition fold
-    # and dedup joins must run exactly once. Without this, the quality
-    # branch re-derives the chain on BOTH sides of its broadcast (cutoff
-    # subtree + main side) and again at the final write — ~4 evaluations of
-    # the most expensive row-local expression in the pipeline.
-    base = flags.persist()
-    pre_quality = F.col("_keep_exact") & F.col("_keep_near") & F.col("_keep_rep")
-    if c.repetition_full:
-        pre_quality = pre_quality & F.col("_keep_repfull")
-    if c.line_filter:
-        pre_quality = pre_quality & F.col("_c4_keep")
-    if c.gopher:
-        pre_quality = pre_quality & F.col("_keep_gopher")
-    if c.zlib_min is not None:
-        pre_quality = pre_quality & F.col("_keep_zlib")
-    if c.decontaminate_ref:
-        pre_quality = pre_quality & F.col("_keep_decon")
-    if c.classifier_ref:
-        pre_quality = pre_quality & F.col("_keep_cls")
-
-    # 4. per-language quality cut computed over the survivors of 1-3 — on
-    #    the THIN ledger (quality was computed in the seeding scan): one
-    #    per-lang percentile partial agg + a broadcast cutoff join, same
-    #    math as textops.quality_floor, zero corpus re-reads
-    surv = base.filter(pre_quality).select(c.id_col, c.lang_col, "quality")
-    cut = surv.groupBy(c.lang_col).agg(
-        F.expr(f"percentile(quality, {1.0 - c.keep_frac})").alias("_cutoff")
-    )
-    kept = (
-        surv.join(F.broadcast(cut), c.lang_col)
-        .filter(F.col("quality") >= F.col("_cutoff"))
-        .select(c.id_col, F.lit(True).alias("_keep_quality"))
-    )
-    flags = base.join(kept, c.id_col, "left").withColumn(
-        "_keep_quality", F.coalesce("_keep_quality", F.lit(False))
-    )
-    # checkpoint the finished ledger (ids + booleans + quality — tiny
-    # relative to the corpus) and reload it from parquet: downstream
-    # consumers read the frozen artifact, not live lineage, and a killed
-    # run resumes from here without repeating any corpus pass
-    # invalidate the meta BEFORE overwriting the ledger: a crash between
-    # the two writes must leave a ledger that no meta validates, never a
-    # stale meta that validates the wrong ledger
-    if os.path.exists(meta_path):
-        os.remove(meta_path)
-    flags.write.mode("overwrite").parquet(ledger_dir)
-    base.unpersist()
-    write_manifest(output, {"config_hash": cfg_hash}, LEDGER_META)
-    flags = spark.read.parquet(ledger_dir)
+        cut = surv.groupBy(c.lang_col).agg(
+            F.expr(f"percentile(quality, {1.0 - c.keep_frac})").alias("_cutoff")
+        )
+        kept = surv.join(F.broadcast(cut), c.lang_col).filter(
+            F.col("quality") >= F.col("_cutoff")
+        )
+        flags = _flag(base, kept, "_keep_quality", c.id_col)
+        # checkpoint the finished ledger (ids + booleans + quality — tiny
+        # relative to the corpus); downstream consumers read the frozen
+        # artifact, not live lineage, and a killed run resumes from here
+        # without repeating any corpus pass. Invalidate the meta BEFORE
+        # overwriting the ledger: a crash between the two writes must
+        # leave a ledger that no meta validates, never a stale meta that
+        # validates the wrong ledger
+        if os.path.exists(meta_path):
+            os.remove(meta_path)
+        flags.write.mode("overwrite").parquet(ledger_dir)
+        base.unpersist()
+        write_manifest(output, {"config_hash": cfg_hash}, LEDGER_META)
     try:
         return _finish_curation(
-            spark, docs, flags, pre_cols, output, c, False,
-            pre_counts=pre_counts,
+            spark, docs, spark.read.parquet(ledger_dir), output, c, resumed,
+            pre_counts, label,
         )
     finally:
         if barrier is not None:
@@ -693,108 +661,39 @@ def _finish_curation(
     spark: SparkSession,
     docs: DataFrame,
     flags: DataFrame,
-    pre_cols: list[str],
     output: str,
     c: CurationConfig,
     resumed: bool,
-    pre_counts: dict[str, int] | None = None,
+    pre_counts: dict[str, int],
+    label: str,
 ) -> dict:
-    """Stages downstream of the checkpointed ledger: counts, PII scrub,
-    packing, (sharded) write, manifest."""
-    # column presence (not config) decides: a resumed ledger carries
-    # _keep_gopher iff it was written with the stage on
-    has_gopher = "_keep_gopher" in flags.columns
-    has_zlib = "_keep_zlib" in flags.columns
-    has_decon = "_keep_decon" in flags.columns
-    has_c4 = "_c4_keep" in flags.columns
-    has_cls = "_keep_cls" in flags.columns
-    has_repfull = "_keep_repfull" in flags.columns
-    rep_only = F.col("_keep_exact") & F.col("_keep_near") & F.col("_keep_rep")
-    repfull_cut = rep_only & F.col("_keep_repfull") if has_repfull else rep_only
-    c4_cut = repfull_cut & F.col("_c4_keep") if has_c4 else repfull_cut
-    gopher_cut = c4_cut & F.col("_keep_gopher") if has_gopher else c4_cut
-    zlib_cut = gopher_cut & F.col("_keep_zlib") if has_zlib else gopher_cut
-    decon_cut = zlib_cut & F.col("_keep_decon") if has_decon else zlib_cut
-    pre_quality = decon_cut & F.col("_keep_cls") if has_cls else decon_cut
-    # the hygiene stat columns ride the LEDGER for accounting; they are
-    # internal and must not leak into the written training corpus
-    docs = docs.drop(
-        "_norm_changed", "_bp_removed", "_lines_removed", "_c4_keep",
-        "_pd_removed", "_ss_removed",
-    )
+    """Stages downstream of the checkpointed ledger: counts, mixture, PII
+    scrub, token budget, epochs, packing, (sharded) write, manifest.
 
-    # ONE aggregate yields every stage count (ledger rows are id+booleans)
-    aggs = [
-        F.count(F.lit(1)).alias("input"),
-        F.sum(F.col("_keep_exact").cast("long")).alias("exact"),
-        F.sum((F.col("_keep_exact") & F.col("_keep_near")).cast("long")).alias("near"),
-        F.sum(rep_only.cast("long")).alias("rep"),
-        F.sum(repfull_cut.cast("long")).alias("repfull"),
-        F.sum(c4_cut.cast("long")).alias("c4"),
-        F.sum(gopher_cut.cast("long")).alias("gopher"),
-        F.sum(zlib_cut.cast("long")).alias("zlib"),
-        F.sum(decon_cut.cast("long")).alias("decon"),
-        F.sum(pre_quality.cast("long")).alias("cls"),
-        F.sum((pre_quality & F.col("_keep_quality")).cast("long")).alias("qual"),
-    ]
-    if "_norm_changed" in pre_cols:
-        aggs.append(F.sum(F.col("_norm_changed").cast("long")).alias("normed"))
-    if "_bp_removed" in pre_cols:
-        aggs.append(F.sum("_bp_removed").alias("bp_removed"))
-    if "_lines_removed" in pre_cols:
-        aggs.append(F.sum("_lines_removed").alias("lines_removed"))
-    if "_pd_removed" in pre_cols:
-        aggs.append(F.sum("_pd_removed").alias("pd_removed"))
-    if "_ss_removed" in pre_cols:
-        aggs.append(F.sum("_ss_removed").alias("ss_removed"))
-    row = flags.agg(*aggs).collect()[0]
-    counts: dict[str, int] = {}
-    if pre_counts:
-        counts.update(pre_counts)
-        # label the post-pre-stage count after the LAST pre stage that ran
-        if c.url_dedup:
-            post = "after_url_dedup"
-        elif c.domain_scores and (
-            c.domain_min_harmonic is not None or c.domain_min_pagerank is not None
-        ):
-            post = "after_domain_filter"
-        else:
-            post = "after_url_filter"
-        counts[post] = row["input"]
-    else:
-        counts["input"] = row["input"]
-    if "_lines_removed" in pre_cols:
-        counts["filtered_lines_removed"] = int(row["lines_removed"] or 0)
-    if "_norm_changed" in pre_cols:
-        counts["normalized_docs"] = int(row["normed"] or 0)
-    if "_bp_removed" in pre_cols:
-        counts["boilerplate_lines_removed"] = int(row["bp_removed"] or 0)
-    if "_pd_removed" in pre_cols:
-        counts["duplicate_paragraphs_removed"] = int(row["pd_removed"] or 0)
-    if "_ss_removed" in pre_cols:
-        counts["substring_tokens_removed"] = int(row["ss_removed"] or 0)
-    counts["after_exact_dedup"] = int(row["exact"] or 0)
-    if c.near_dup:
-        counts["after_near_dup"] = int(row["near"] or 0)
-    counts["after_repetition_filter"] = int(row["rep"] or 0)
-    if has_repfull:
-        counts["after_repetition_full"] = int(row["repfull"] or 0)
-    if has_c4:
-        counts["after_line_filter"] = int(row["c4"] or 0)
-    if has_gopher:
-        counts["after_gopher_rules"] = int(row["gopher"] or 0)
-    if has_zlib:
-        counts["after_zlib_filter"] = int(row["zlib"] or 0)
-    if has_decon:
-        counts["after_decontaminate"] = int(row["decon"] or 0)
-    if has_cls:
-        counts["after_classifier"] = int(row["cls"] or 0)
-    counts["after_quality_floor"] = int(row["qual"] or 0)
+    The ledger's columns, not the config, decide what is cut and counted —
+    a resumed ledger carries exactly the stages it was written with. ONE
+    aggregate over the thin ledger yields every count: its rows under
+    ``label`` (the key the last pre-ledger filter named, next to the
+    ``pre_counts`` those filters took), the sum of each
+    :data:`LEDGER_STATS` column present, and the survivors of each
+    :data:`LEDGER_CUTS` cut present and of every cut before it."""
+    cuts = _cuts(flags.columns)
+    keep = cuts[-1][1]
+    # the hygiene columns ride the LEDGER for accounting; they are internal
+    # and must not leak into the written training corpus
+    docs = docs.drop(*LEDGER_COLUMNS)
+    row = flags.agg(
+        F.count(F.lit(1)).alias(label),
+        *(
+            F.sum(F.col(col).cast("long")).alias(key)
+            for col, key in LEDGER_STATS
+            if col in flags.columns
+        ),
+        *(F.sum(kept.cast("long")).alias(key) for key, kept in cuts),
+    ).collect()[0]
+    counts = {**pre_counts, **{k: int(v or 0) for k, v in row.asDict().items()}}
 
-    cur = docs.join(
-        flags.filter(pre_quality & F.col("_keep_quality")).select(c.id_col, "quality"),
-        c.id_col,
-    )
+    cur = docs.join(flags.filter(keep).select(c.id_col, "quality"), c.id_col)
 
     # 4b. optional mixture sampling to target language proportions,
     #     computed ENTIRELY on the thin ledger (id + lang — the rank window
@@ -803,9 +702,7 @@ def _finish_curation(
         from logai_spark.functions.textops import mixture_sample
 
         sel = mixture_sample(
-            flags.filter(pre_quality & F.col("_keep_quality")).select(
-                c.id_col, c.lang_col
-            ),
+            flags.filter(keep).select(c.id_col, c.lang_col),
             targets=dict(c.mixture),
             group_col=c.lang_col,
             id_col=c.id_col,
@@ -904,7 +801,9 @@ def _finish_curation(
     ]
     if c.n_shards:
         waggs.append(F.count_distinct("shard").alias("s"))
-    wrow = spark.read.parquet(out_dir).agg(*waggs).collect()[0]
+    # the written frame's schema, not inference: a zero-row partitioned
+    # write leaves only _SUCCESS behind
+    wrow = spark.read.schema(final.schema).parquet(out_dir).agg(*waggs).collect()[0]
     counts["written"] = wrow["n"]
     counts["packs"] = wrow["p"]
     if c.n_shards:

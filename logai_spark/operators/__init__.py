@@ -16,7 +16,6 @@ from logai_spark.operators.route import (
     compact_sinks,
     read_sink,
     route_to_sinks,
-    salted_repartition,
     sink_file_stats,
 )
 from logai_spark.operators.splits import split_by_span
@@ -39,5 +38,4 @@ __all__ = [
     "compact_sinks",
     "sink_file_stats",
     "read_sink",
-    "salted_repartition",
 ]

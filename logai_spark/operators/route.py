@@ -140,24 +140,6 @@ def footer_lineage_scan(
     return paths_df.mapInPandas(_read_footers, schema=from_arrow_schema(schema))
 
 
-def salted_repartition(df: DataFrame, key: str, salt_buckets: int = 8) -> DataFrame:
-    """Repartition on (key, salt) so one hot key spreads over ``salt_buckets``
-    output tasks instead of serializing into one writer.
-
-    The salt is a hash of the FULL ROW CONTENT — a deterministic expression,
-    so a retried task recomputes the same partitioning (salting with
-    monotonically_increasing_id would let rows migrate between partitions
-    across task attempts, the classic repartition-retry correctness hazard).
-    Exact duplicate rows share a salt; if the hot key's rows are literal
-    duplicates, dedup-with-counts first.
-    """
-    salted = df.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_buckets)),
-    )
-    return salted.repartition(key, "_salt").drop("_salt")
-
-
 def hot_key_buckets(
     sizes: dict[str, int], parallelism: int = 32, skew_factor: float = 2.0
 ) -> dict[str, int]:

@@ -745,3 +745,141 @@ def test_curation_zlib_stage(spark, tmp_path):
     assert "after_zlib_filter" not in m2["counts"]
     written2 = spark.read.parquet(os.path.join(out2, "curated"))
     assert 50 in {r.doc_id for r in written2.select("doc_id").collect()}
+
+
+def test_curation_empty_result_writes_manifest(spark, tmp_path):
+    """A config that drops every doc still audits and writes its manifest,
+    flat or sharded (a zero-row partitioned write leaves only _SUCCESS)."""
+    bl_dir = str(tmp_path / "bl")
+    spark.createDataFrame([("blocked.example",)], "domain string").write.parquet(bl_dir)
+    docs = _docs(spark).withColumn("url", F.lit("https://blocked.example/p"))
+    for n_shards in (None, 2):
+        out = str(tmp_path / f"empty_{n_shards}")
+        m = run_curation(
+            spark, docs, out, CurationConfig(url_blocklist=bl_dir, n_shards=n_shards)
+        )
+        c = m["counts"]
+        assert (c["input"], c["after_url_filter"]) == (19, 0)
+        assert (c["written"], c["packs"]) == (0, 0)
+        disk = json.load(open(os.path.join(out, "_curation_manifest.json")))
+        assert disk["counts"] == c
+
+
+def _composed_inputs(spark, tmp_path):
+    """~27 multi-line random-vocabulary pages plus an exact dup, a near dup,
+    a URL dup, a spam page and two pages on a blocked host; and the side
+    tables every optional stage reads."""
+    import random
+
+    rng = random.Random(7)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    vocab = [
+        "".join(rng.choice(letters) for _ in range(rng.randint(4, 8)))
+        for _ in range(300)
+    ]
+    stop = ["the", "and", "of", "to", "with", "that"]
+
+    def page():
+        lines = []
+        for _ in range(8):
+            words = [rng.choice(vocab) for _ in range(9)]
+            words[2], words[5] = rng.choice(stop), rng.choice(stop)
+            lines.append(" ".join(words).capitalize() + ".")
+        lines.append("Read more about the site and the team here.")
+        return "\n".join(lines)
+
+    rows = [
+        (i, page(), "de" if i % 3 == 0 else "en", f"site{i % 4}.org",
+         f"https://site{i % 4}.org/p{i}")
+        for i in range(21)
+    ]
+    # one word swapped mid-page: no 50-token window repeats, MinHash agrees
+    words = rows[2][1].split(" ")
+    near = " ".join(words[:36] + ["swapped"] + words[37:])
+    rows[4] = (4, rows[4][1].replace(" ", "  ", 1), *rows[4][2:])  # normalize
+    rows += [
+        (21, page(), "en", "site1.org", "https://site1.org/p1/"),   # URL dup of 1
+        (22, rows[0][1], "de", "site2.org", "https://site2.org/copy"),  # exact dup
+        (23, near, "en", "site2.org", "https://site2.org/near"),  # near dup
+        (24, "click here buy now " * 120, "en", "site0.org",
+         "https://site0.org/spam"),
+        (25, page(), "en", "site1.org", "https://blocked.example/a"),
+        (26, page(), "de", "site2.org", "https://sub.blocked.example/b"),
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, url string"
+    )
+    paths = {k: str(tmp_path / k) for k in ("bl", "scores", "decon", "cls")}
+    spark.createDataFrame([("blocked.example",)], "domain string").write.parquet(
+        paths["bl"]
+    )
+    spark.createDataFrame(
+        [("site0.org", 0.3, 5.0), ("site1.org", 0.3, 5.0), ("site3.org", 0.1, 0.5)],
+        "domain string, pagerank double, harmonic double",
+    ).write.parquet(paths["scores"])
+    spark.createDataFrame([(900, rows[5][1])], "doc_id long, text string").write.parquet(
+        paths["decon"]
+    )
+    spark.createDataFrame(
+        [(950 + i, rows[i][1]) for i in range(12)], "doc_id long, text string"
+    ).write.parquet(paths["cls"])
+    return docs, paths
+
+
+def test_curation_every_stage_composed_then_resume(spark, tmp_path):
+    """Every optional stage at once: the manifest names each stage's count,
+    the ledger cuts only ever shrink the corpus, and a resume from the
+    checkpointed ledger reproduces every count."""
+    import shutil
+
+    from logai_spark.curate import LEDGER_CUTS
+
+    docs, paths = _composed_inputs(spark, tmp_path)
+    cfg = CurationConfig(
+        keep_frac=0.9,
+        pack_budget=200,
+        url_blocklist=paths["bl"],
+        domain_scores=paths["scores"],
+        domain_min_harmonic=1.0,
+        url_dedup=True,
+        line_filter=True,
+        normalize=True,
+        boilerplate_max_df=3,
+        paragraph_dedup=True,
+        substring_window=50,
+        gopher=True,
+        zlib_min=0.2,
+        repetition_full=True,
+        decontaminate_ref=paths["decon"],
+        classifier_ref=paths["cls"],
+        classifier_neg_frac=0.2,
+        classifier_buckets=64,
+        near_dup=True,
+        mixture={"en": 0.6, "de": 0.4},
+        token_budget=1500,
+        epochs={"site0.org": 2.0, "site1.org": 1.5},
+        n_shards=2,
+        resume=True,
+    )
+    out = str(tmp_path / "composed")
+    m1 = run_curation(spark, docs, out, cfg)
+    c = m1["counts"]
+    assert set(c) == {
+        "input", "after_url_filter", "after_domain_filter", "after_url_dedup",
+        "filtered_lines_removed", "normalized_docs",
+        "boilerplate_lines_removed", "duplicate_paragraphs_removed",
+        "substring_tokens_removed",
+        *(key for _, key in LEDGER_CUTS),
+        "after_mixture", "after_token_budget", "after_epochs",
+        "written", "packs", "shards",
+    }
+    assert c["input"] == 27 and c["after_url_filter"] == 25
+    cuts = [c[key] for _, key in LEDGER_CUTS]
+    assert c["after_url_dedup"] >= cuts[0]
+    assert cuts == sorted(cuts, reverse=True)
+    assert m1["resumed_from_ledger"] is False
+
+    shutil.rmtree(os.path.join(out, "curated"))
+    m2 = run_curation(spark, docs, out, cfg)
+    assert m2["resumed_from_ledger"] is True
+    assert m2["counts"] == c

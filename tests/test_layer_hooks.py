@@ -30,3 +30,16 @@ def test_pipeline_tail_calls_the_patched_globals():
     assert "mine_templates" in pipeline.run_pipeline.__code__.co_names
     names = set(pipeline.parse_route_aggregate.__code__.co_names)
     assert {"route_to_sinks", "counter_vector", "verify_routed_write"} <= names
+
+
+def test_curation_calls_the_patched_globals():
+    from logai_spark import curate
+
+    names = set(curate.run_curation.__code__.co_names)
+    assert {"exact_dedup", "repetition_stats"} <= names
+    finish = set(curate._finish_curation.__code__.co_names)
+    assert {"pii_redact", "pack_sequences"} <= finish
+    # patched in their own modules: imported inside run_curation at call
+    # time, never bound as curate globals a patch would miss
+    assert {"quality_score", "dup_clusters"} <= names
+    assert not hasattr(curate, "quality_score") and not hasattr(curate, "dup_clusters")

@@ -153,3 +153,32 @@ def test_commit_of_empty_write(spark, tmp_path):
     assert (m["total_rows"], m["sinks"], m["n_sinks"]) == (0, {}, 0)
     assert manifest_of(path) == m
     assert file_lineage(spark, path).count() == 0
+
+
+def test_lineage_fan_out_matches_driver_path(spark, tmp_path, monkeypatch):
+    """Above ``driver_threshold`` files the footer reads fan out through
+    mapInPandas and the per-sink totals come back from the written sidecar:
+    manifest and sidecar rows must equal the driver path's."""
+    from logai_spark.operators import route
+
+    path = str(tmp_path / "sinks")
+    _escaped_routed(spark, path)
+
+    def sidecar():
+        rows = file_lineage(spark, path).select("template_id", "file", "n_rows").collect()
+        return sorted(map(tuple, rows), key=repr)
+
+    driver = commit_lineage(spark, path, "route", "template_id")
+    driver_rows = sidecar()
+    scan, kinds = route.footer_lineage_scan, []
+
+    def fanned_scan(*a, **kw):
+        out = scan(*a, **kw, driver_threshold=0)
+        kinds.append(type(out).__name__)
+        return out
+
+    monkeypatch.setattr(route, "footer_lineage_scan", fanned_scan)
+    fanned = commit_lineage(spark, path, "route", "template_id")
+    assert kinds == ["DataFrame"]
+    assert fanned == driver and fanned["sinks"][NULL_SINK] == 4
+    assert sidecar() == driver_rows and len(driver_rows) == 5
