@@ -12,6 +12,10 @@ import importlib.util
 import sys
 import types
 
+import pytest
+
+from tests.conftest import requires_reference
+
 REF_DRAIN = "/root/reference/logai/algorithms/parsing_algo/drain.py"
 
 
@@ -85,14 +89,26 @@ def load_reference_drain():
     return mod
 
 
+# name: (reference raw-log file, field separator, index of the body field)
+FIXTURES = {
+    "healthapp": ("/root/reference/tests/logai/test_data/HealthApp_2000.log", "|", 3),
+    "hdfs": ("/root/reference/tests/logai/test_data/HDFS_5000.log", " ", 4),
+    "bgl": ("/root/reference/tests/logai/test_data/BGL_2000.log", " ", 6),
+}
+
+
+def fixture_params() -> list:
+    """One pytest parameter per reference fixture, each gated on its file."""
+    return [
+        pytest.param(name, marks=requires_reference(path))
+        for name, (path, _, _) in FIXTURES.items()
+    ]
+
+
 def fixture_lines(name: str) -> list[str]:
-    """Body column of a reference raw-log fixture."""
-    paths = {
-        "healthapp": ("/root/reference/tests/logai/test_data/HealthApp_2000.log", "|", 3),
-        "hdfs": ("/root/reference/tests/logai/test_data/HDFS_5000.log", " ", 4),
-        "bgl": ("/root/reference/tests/logai/test_data/BGL_2000.log", " ", 6),
-    }
-    path, sep, n = paths[name]
+    """Body column of a reference raw-log fixture (parity tests only; the
+    property tests read tests/synth_logs.py)."""
+    path, sep, n = FIXTURES[name]
     out = []
     with open(path, errors="replace") as f:
         for ln in f:

@@ -1,5 +1,6 @@
-"""End-to-end application tests on HealthApp-style fixture logs — the
-reference's own test style (tests/logai/applications/*)."""
+"""End-to-end application tests on generated HealthApp logs
+(tests/synth_logs.py) — the reference's own test style
+(tests/logai/applications/*)."""
 
 import pandas as pd
 import pytest
@@ -12,17 +13,12 @@ from logai_spark.plans.applications import (
     WorkFlowConfig,
 )
 from logai_spark.plans.factory import factory
-from tests.reference_drain import fixture_lines
+from tests.synth_logs import healthapp_lines
 
 
 @pytest.fixture(scope="module")
 def healthapp(spark):
-    lines = []
-    with open("/root/reference/tests/logai/test_data/HealthApp_2000.log") as f:
-        for ln in f:
-            parts = ln.rstrip("\n").split("|", 3)
-            if len(parts) == 4:
-                lines.append(parts)
+    lines = [ln.split("|", 3) for ln in healthapp_lines()]
     pdf = pd.DataFrame(lines, columns=["ts", "Action", "ID", "logline"])
     pdf["timestamp"] = pd.to_datetime(pdf["ts"], format="%Y%m%d-%H:%M:%S:%f")
     return spark.createDataFrame(pdf[["timestamp", "Action", "ID", "logline"]]).cache()
@@ -67,8 +63,10 @@ def test_log_clustering(spark, healthapp):
     assert out.count() == 500
     n_clusters = out.select("cluster_id").distinct().count()
     assert 1 < n_clusters <= 5
-    # same template -> same cluster id (feature determinism smoke)
-    per_template = out.groupBy("template").agg(
+    # identical features -> same cluster id (feature determinism smoke);
+    # features are tfidf(template) + the encoded cfg.attributes, so one
+    # template under two Actions is two feature vectors
+    per_template = out.groupBy("template", *app.config.attributes).agg(
         F.countDistinct("cluster_id").alias("n")
     )
     assert per_template.filter(F.col("n") > 1).count() == 0

@@ -4,9 +4,9 @@ Reference contract: LogAI's subword tokenizers come from HuggingFace
 (vectorization_algo/logbert.py:87-146); BPE is the sibling trainer of the
 WordPiece one it uses, re-expressed Spark-first. Pins (a) the merge loop on
 a hand-computed fixture (Sennrich et al. 2016 alg. 1 semantics), (b)
-distributed-vs-single-process parity of fit+encode on the reference HDFS
-fixture, (c) lossless reconstruction (BPE has no [UNK] — every word is
-representable), (d) the lowest-rank-first inference loop."""
+distributed-vs-single-process parity of fit+encode on generated HDFS
+lines (tests/synth_logs.py), (c) lossless reconstruction (BPE has no
+[UNK] — every word is representable), (d) the lowest-rank-first inference loop."""
 
 from collections import Counter
 
@@ -20,8 +20,7 @@ from logai_spark.functions.bpe import (
     train_bpe_from_counts,
 )
 from logai_spark.functions.wordpiece import pretokenize_py
-
-HDFS_FIXTURE = "/root/reference/tests/logai/test_data/HDFS_5000.log"
+from tests.synth_logs import hdfs_lines
 
 
 def test_merge_loop_hand_computed():
@@ -72,8 +71,7 @@ def test_encode_applies_lowest_rank_first():
 def test_hdfs_fixture_distributed_matches_local(spark):
     """Distributed word counts + driver merge loop == pure-Python Counter +
     the same loop; distributed Arrow encode == per-word local encode."""
-    with open(HDFS_FIXTURE) as f:
-        lines = [ln.rstrip("\n") for ln in f][:800]
+    lines = hdfs_lines()[:800]
     df = spark.createDataFrame([(ln,) for ln in lines], "text string")
 
     merges_d = fit_bpe(df, num_merges=120)

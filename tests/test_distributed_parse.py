@@ -1,4 +1,7 @@
-"""Distributed two-pass Drain: determinism, coverage, and routing equality."""
+"""Distributed two-pass Drain: determinism, coverage, and routing equality,
+on generated HealthApp lines (tests/synth_logs.py)."""
+
+from collections import Counter
 
 import pandas as pd
 import pytest
@@ -10,19 +13,19 @@ from logai_spark.parse.distributed import (
     parse_df,
 )
 from logai_spark.parse.drain import DrainConfig, DrainTree
-from tests.reference_drain import fixture_lines
+from tests.synth_logs import body_lines
 
 
 @pytest.fixture(scope="module")
 def healthapp_df(spark):
-    lines = fixture_lines("healthapp")
+    lines = body_lines("healthapp")
     return spark.createDataFrame(
         pd.DataFrame({"logline": lines})
     ).repartition(4).cache()
 
 
 def test_mine_is_deterministic_across_partitionings(spark):
-    lines = fixture_lines("healthapp")
+    lines = body_lines("healthapp")
     pdf = pd.DataFrame({"logline": lines})
     t2 = mine_templates(spark.createDataFrame(pdf).repartition(2))
     t7 = mine_templates(spark.createDataFrame(pdf).repartition(7))
@@ -57,13 +60,18 @@ def test_template_counts_cover_all_lines(spark, healthapp_df):
 def test_single_node_is_special_case_of_distributed(spark):
     """With 1 partition and no merge interference, the distributed mine
     reduces to the plain tree's template set."""
-    lines = fixture_lines("healthapp")
+    lines = body_lines("healthapp")
     df = spark.createDataFrame(pd.DataFrame({"logline": lines})).coalesce(1)
     # mine_partitions=1 -> exactly one partition-local tree (the fixed default
     # of 64 shards the distinct lines regardless of input partitioning)
     dist = {t for t, _ in mine_templates(df, config=DrainConfig(mine_partitions=1))}
+    # Drain is order-sensitive; the mine fits each distinct line once,
+    # weighted by its count, frequent lines first with a lexicographic
+    # tiebreak (so its result is independent of input order). The plain
+    # tree fits the lines in that same order.
     local = DrainTree(DrainConfig())
-    local.fit(lines)
+    for line, cnt in sorted(Counter(lines).items(), key=lambda lc: (-lc[1], lc[0])):
+        local.add_line(line).size += cnt - 1
     # merging a tree's own templates can only coarsen; with one partition the
     # merge pass sees exactly the local templates
     merged = DrainTree(DrainConfig())

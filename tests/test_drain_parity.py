@@ -2,19 +2,31 @@
 
 Parity contract: identical per-line template under the reference's own
 two-pass mode (fit then match, drain.py:428-438), on the reference's raw
-fixture datasets.
+fixture datasets. The parity tests need the reference checkout and skip,
+naming the missing file, where it is absent.
 """
+
+import os
 
 import pandas as pd
 import pytest
 
 from logai_spark.parse.drain import DrainConfig, DrainTree
-from tests.reference_drain import fixture_lines, load_reference_drain
+from tests.conftest import requires_reference
+from tests.reference_drain import (
+    FIXTURES,
+    REF_DRAIN,
+    fixture_lines,
+    fixture_params,
+    load_reference_drain,
+)
 
-refdrain = load_reference_drain()
+refdrain = load_reference_drain() if os.path.exists(REF_DRAIN) else None
+DATASETS = fixture_params()
 
 
-@pytest.mark.parametrize("dataset", ["healthapp", "hdfs", "bgl"])
+@requires_reference(REF_DRAIN)
+@pytest.mark.parametrize("dataset", DATASETS)
 def test_single_tree_parity(dataset):
     lines = fixture_lines(dataset)
     assert len(lines) > 1000
@@ -24,6 +36,7 @@ def test_single_tree_parity(dataset):
     assert my_out == ref_out
 
 
+@requires_reference(REF_DRAIN, FIXTURES["healthapp"][0])
 def test_parity_with_max_clusters_lru():
     lines = fixture_lines("healthapp")
     ref = refdrain.Drain(refdrain.DrainParams(max_clusters=50))
@@ -35,6 +48,7 @@ def test_parity_with_max_clusters_lru():
     assert my_templates == ref_templates
 
 
+@requires_reference(REF_DRAIN, FIXTURES["hdfs"][0])
 def test_parity_nondefault_params():
     lines = fixture_lines("hdfs")
     ref = refdrain.Drain(refdrain.DrainParams(depth=4, sim_th=0.3, max_children=10))
@@ -43,6 +57,7 @@ def test_parity_nondefault_params():
     assert my_out == ref_out
 
 
+@requires_reference(REF_DRAIN)
 def test_extra_delimiters():
     lines = ["a_b c 1", "a_b c 2", "x_y z 9"]
     ref = refdrain.Drain(refdrain.DrainParams(extra_delimiters=("_",)))
@@ -51,7 +66,8 @@ def test_extra_delimiters():
     assert my_out == ref_out
 
 
-@pytest.mark.parametrize("dataset", ["healthapp", "hdfs", "bgl"])
+@requires_reference(REF_DRAIN)
+@pytest.mark.parametrize("dataset", DATASETS)
 def test_frozen_matcher_equals_reference_two_pass(dataset):
     """The distributed design's match pass (frozen matcher over the final
     template set, parse/distributed.build_matcher) assigns every line the

@@ -3,8 +3,11 @@
 Parity contract: identical per-line template string for every line, on the
 reference's own raw fixture datasets, plus weighted-distinct equivalence
 (our distributed core runs on distinct lines with counts) and the Spark
-applyInPandas wrapper.
+applyInPandas wrapper. The parity tests need the reference checkout and
+skip, naming the missing file, where it is absent.
 """
+
+import os
 
 import pandas as pd
 import pytest
@@ -15,10 +18,12 @@ from logai_spark.parse.iplom import (
     parse_iplom,
     tokenize_iplom,
 )
-from tests.reference_drain import fixture_lines
-from tests.reference_iplom import load_reference_iplom
+from tests.conftest import requires_reference
+from tests.reference_drain import FIXTURES, fixture_lines, fixture_params
+from tests.reference_iplom import REF_IPLOM, load_reference_iplom
 
-refmod = load_reference_iplom()
+refmod = load_reference_iplom() if os.path.exists(REF_IPLOM) else None
+DATASETS = fixture_params()
 
 
 def reference_parse(lines: list[str], **params) -> list[str]:
@@ -37,7 +42,8 @@ def our_parse(lines: list[str], config: IPLoMConfig | None = None) -> list[str]:
     return [mapping.get(ln) for ln in lines]
 
 
-@pytest.mark.parametrize("dataset", ["healthapp", "hdfs", "bgl"])
+@requires_reference(REF_IPLOM)
+@pytest.mark.parametrize("dataset", DATASETS)
 def test_iplom_parity_fixtures(dataset):
     lines = fixture_lines(dataset)
     assert len(lines) > 1000
@@ -50,6 +56,7 @@ def test_iplom_parity_fixtures(dataset):
     assert mismatches == [], mismatches[:5]
 
 
+@requires_reference(REF_IPLOM)
 def test_iplom_len2_step3_parity():
     # width-2 partitions exercise step 3's (0,1) path (iplom.py:526-528)
     lines = (
@@ -61,6 +68,7 @@ def test_iplom_len2_step3_parity():
     assert our_parse(lines) == reference_parse(lines)
 
 
+@requires_reference(REF_IPLOM)
 def test_iplom_weighted_distinct_equivalence():
     # heavy duplication: weighting must reproduce per-line-count decisions
     lines = ["conn from 10.0.0.1 port 80"] * 500 + [
@@ -69,6 +77,7 @@ def test_iplom_weighted_distinct_equivalence():
     assert our_parse(lines) == reference_parse(lines)
 
 
+@requires_reference(REF_IPLOM)
 def test_iplom_rex_masking():
     lines = [f"job {i} finished in {i * 3}ms" for i in range(40)]
     cfg = IPLoMConfig(rex=[r"\d+"])
@@ -82,6 +91,7 @@ def test_tokenize_matches_reference_split():
     assert tokenize_iplom(" =:, ") == [" "]
 
 
+@requires_reference(REF_IPLOM, FIXTURES["healthapp"][0])
 def test_parse_iplom_spark(spark):
     lines = fixture_lines("healthapp")[:1500]
     df = spark.createDataFrame(pd.DataFrame({"logline": lines}))

@@ -1,4 +1,5 @@
-"""OpenSet AD workflow end-to-end on the HDFS fixture + span split semantics."""
+"""OpenSet AD workflow end-to-end on generated HDFS logs (tests/synth_logs.py),
+and span split semantics."""
 
 import pandas as pd
 import pytest
@@ -6,6 +7,7 @@ from pyspark.sql import functions as F
 
 from logai_spark.operators.splits import split_by_span
 from logai_spark.plans.openset_workflow import OpenSetADConfig, run_openset_ad
+from tests.synth_logs import write_log
 
 
 def test_split_by_span_fractions_and_unsupervised_override(spark):
@@ -37,14 +39,17 @@ def test_split_supervised_keeps_positives_in_train(spark):
 
 
 @pytest.fixture(scope="module")
-def hdfs_label_file(tmp_path_factory, spark):
-    """Synthesize the anomaly-label companion table from real block ids."""
+def hdfs_log(tmp_path_factory):
+    return write_log(tmp_path_factory.mktemp("hdfs") / "HDFS_5000.log", "hdfs")
+
+
+@pytest.fixture(scope="module")
+def hdfs_label_file(tmp_path_factory, spark, hdfs_log):
+    """Synthesize the anomaly-label companion table from the log's block ids."""
     from logai_spark.preprocess_opensets import hdfs_preprocess
     from logai_spark.sources.readers import load_openset
 
-    df = hdfs_preprocess(
-        load_openset(spark, "hdfs", "/root/reference/tests/logai/test_data/HDFS_5000.log")
-    )
+    df = hdfs_preprocess(load_openset(spark, "hdfs", hdfs_log))
     blocks = sorted(
         r["span_id"] for r in df.filter(F.col("span_id").isNotNull())
         .select("span_id").distinct().collect()
@@ -60,10 +65,10 @@ def hdfs_label_file(tmp_path_factory, spark):
     return str(p)
 
 
-def test_openset_ad_workflow_hdfs(spark, tmp_path, hdfs_label_file):
+def test_openset_ad_workflow_hdfs(spark, tmp_path, hdfs_log, hdfs_label_file):
     cfg = OpenSetADConfig(
         dataset="hdfs",
-        filepath="/root/reference/tests/logai/test_data/HDFS_5000.log",
+        filepath=hdfs_log,
         label_filepath=hdfs_label_file,
         window_size=5,
         checkpoint_dir=str(tmp_path / "ckpt"),
@@ -126,10 +131,10 @@ def test_forecast_detect_flags_grammar_breaking_span(spark):
     assert m["tp"] == 1 and m["fp"] == 0 and m["f1"] == 1.0
 
 
-def test_openset_ad_workflow_hdfs_forecast(spark, tmp_path, hdfs_label_file):
+def test_openset_ad_workflow_hdfs_forecast(spark, tmp_path, hdfs_log, hdfs_label_file):
     cfg = OpenSetADConfig(
         dataset="hdfs",
-        filepath="/root/reference/tests/logai/test_data/HDFS_5000.log",
+        filepath=hdfs_log,
         label_filepath=hdfs_label_file,
         window_size=5,
         detector="forecast_next_event",

@@ -11,6 +11,7 @@ from logai_spark.sources.readers import (
     load_data,
     read_grok_text,
 )
+from tests.synth_logs import write_log
 
 HDFS_FORMAT = "<Date> <Time> <Pid> <Level> <Content>"
 
@@ -97,35 +98,31 @@ def test_dense_ids_deterministic(spark):
     assert mapping == {"a": 0, "b": 1, "c": 2}
 
 
-def test_load_openset_healthapp(spark):
+def test_load_openset_healthapp(spark, tmp_path):
     from logai_spark.sources.readers import load_openset
 
     df = load_openset(
-        spark, "healthapp", "/root/reference/tests/logai/test_data/HealthApp_2000.log"
+        spark, "healthapp", write_log(tmp_path / "HealthApp_2000.log", "healthapp")
     )
     assert set(df.columns) == {"logline", "timestamp", "Action", "ID"}
     assert df.count() > 1900
     assert df.filter(F.col("timestamp").isNull()).count() == 0
 
 
-def test_load_openset_hdfs(spark):
+def test_load_openset_hdfs(spark, tmp_path):
     from logai_spark.sources.readers import load_openset
 
-    df = load_openset(
-        spark, "hdfs", "/root/reference/tests/logai/test_data/HDFS_5000.log"
-    )
+    df = load_openset(spark, "hdfs", write_log(tmp_path / "HDFS_5000.log", "hdfs"))
     assert set(df.columns) == {"logline", "timestamp", "Level", "span_id"}
     assert df.count() > 4900
     levels = {r["Level"] for r in df.select("Level").distinct().collect()}
     assert levels <= {"INFO", "WARN", "ERROR", "FATAL"}
 
 
-def test_load_openset_bgl(spark):
+def test_load_openset_bgl(spark, tmp_path):
     from logai_spark.sources.readers import load_openset
 
-    df = load_openset(
-        spark, "bgl", "/root/reference/tests/logai/test_data/BGL_2000.log"
-    )
+    df = load_openset(spark, "bgl", write_log(tmp_path / "BGL_2000.log", "bgl"))
     assert {"logline", "timestamp", "labels", "span_id"} <= set(df.columns)
     assert df.count() > 1900
 

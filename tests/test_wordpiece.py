@@ -3,8 +3,8 @@
 Reference contract: LogAI trains a HF WordPiece tokenizer over the corpus
 (vectorization_algo/logbert.py:87-146). These tests pin (a) the merge loop
 against a hand-computed fixture, (b) distributed-vs-single-process parity
-of the full fit+encode path on the reference's HDFS fixture, (c) HF
-WordPiece inference semantics (greedy longest match, whole-word [UNK])."""
+of the full fit+encode path on generated HDFS lines (tests/synth_logs.py),
+(c) HF WordPiece inference semantics (greedy longest match, whole-word [UNK])."""
 
 from collections import Counter
 
@@ -20,8 +20,7 @@ from logai_spark.functions.wordpiece import (
     wordpiece_encode,
     wordpiece_token_count,
 )
-
-HDFS_FIXTURE = "/root/reference/tests/logai/test_data/HDFS_5000.log"
+from tests.synth_logs import hdfs_lines
 
 
 def test_merge_loop_hand_computed():
@@ -96,11 +95,10 @@ def test_pretokenize_unicode_whitespace_parity(spark):
 
 
 def test_hdfs_fixture_distributed_matches_local(spark):
-    """Full parity on the reference HDFS fixture: distributed word counts +
+    """Full parity on generated HDFS lines: distributed word counts +
     driver merge loop == pure-Python Counter + the same loop; distributed
     encode == per-word local encode."""
-    with open(HDFS_FIXTURE) as f:
-        lines = [ln.rstrip("\n") for ln in f][:800]
+    lines = hdfs_lines()[:800]
     df = spark.createDataFrame([(ln,) for ln in lines], "text string")
 
     vocab_d = fit_wordpiece(df, vocab_size=150)
