@@ -263,19 +263,20 @@ def _q_iplom_templates(spark, sf_dir):
 def _q_drain_parse(spark, sf_dir):
     """Distributed Drain end-to-end (SURVEY §2.7 flagship): mine partition-
     local trees over logical md5 shards, merge deterministically, match every
-    line via global-dedup + equi-join (the scaling matcher), count lines per
-    template id. Oracle: a single-process pure-Python replica of the same
-    pipeline (parse/distributed.mine_templates_local) rendered as a VALUES
-    fixture — verifies the distributed orchestration is partition-invariant
+    line with the frozen matcher (parse/distributed.match_templates, the
+    pipeline's one match plan), count lines per template id. Oracle: a
+    single-process pure-Python replica of the same pipeline
+    (parse/distributed.mine_templates_local) rendered as a VALUES fixture —
+    verifies the distributed orchestration is partition-invariant
     and line-exact vs a single-node run. Algorithm parity vs the reference's
     own Drain (drain.py:363-438) is separately pinned by tests/test_drain_parity."""
-    from logai_spark.parse.distributed import match_templates_by_join, mine_templates
+    from logai_spark.parse.distributed import match_templates, mine_templates
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("logline")
     )
     templates = mine_templates(docs, "logline")
-    matched = match_templates_by_join(docs, "logline", templates)
+    matched = match_templates(docs, "logline", templates, template_col=None)
     return matched.groupBy("template_id").agg(F.count(F.lit(1)).alias("n_lines"))
 
 

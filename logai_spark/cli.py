@@ -34,7 +34,8 @@ def main(argv: list[str] | None = None) -> int:
     run.add_argument("--mine-sample", type=float, default=1.0)
     run.add_argument("--charset-sniff", action="store_true",
                      help="WHATWG charset sniff+decode instead of strict "
-                          "utf-8 (functions/charset.py; fixes mojibake on "
+                          "utf-8 in both the mining and the match pass "
+                          "(functions/charset.py; fixes mojibake on "
                           "non-UTF-8 pages, keeps utf-8 pages byte-identical)")
 
     bench = sub.add_parser("bench", help="run the repo benchmark")

@@ -158,10 +158,10 @@ def _ids_by_join(
     elements, equi-join the vocab DataFrame, reassemble ordered id arrays,
     and join the mapping back onto the fact table by the carrier string.
 
-    This is the scale-correct shape (same pattern as tfidf_transform and
-    match_templates_by_join): the vocab stays a DataFrame — Spark broadcasts
-    it when small and shuffle-joins when it is the 10^7-entry vocab of a
-    web-scale corpus — and NOTHING is collected to the driver. OOV id =
+    This is the scale-correct shape (same pattern as tfidf_transform): the
+    vocab stays a DataFrame — Spark broadcasts it when small and
+    shuffle-joins when it is the 10^7-entry vocab of a web-scale corpus —
+    and NOTHING is collected to the driver. OOV id =
     vocab row count (reference semantics: sequential.py:96-99); pass
     ``oov_id`` when the fit stage already knows it so repeated transforms
     don't each pay a count job over the vocab lineage.

@@ -13,7 +13,7 @@ pass 2 (merge):  the tiny template set is collected and re-clustered on the
                  lexicographic — deterministic regardless of partition order)
                  into a fresh DrainTree. Result: the global template dict.
 pass 3 (match):  the merged tree is broadcast and every line is matched with
-                 frozen sim_th=1.0 semantics inside an Arrow pandas_udf, with
+                 frozen sim_th=1.0 semantics by ``template_id_matcher``, with
                  an in-executor memoization cache (log lines repeat heavily).
 
 Parity definition (SURVEY.md §7.3): same template per line as the reference
@@ -22,12 +22,14 @@ run in its own two-pass fit/match mode.
 
 from __future__ import annotations
 
+from typing import Callable, Iterator
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from logai_spark.parse.drain import DrainConfig, DrainTree, template_id_of
+from logai_spark.parse.drain import DrainConfig, DrainTree, _Cluster, template_id_of
 
 _MINE_SCHEMA = T.StructType(
     [
@@ -184,13 +186,32 @@ def build_matcher(templates: list[tuple[str, int]], config: DrainConfig | None =
     tree = DrainTree(cfg)
     for template, size in templates:
         tokens = tuple(tree.tokenize(template))
-        from logai_spark.parse.drain import _Cluster
-
         tree._next_id += 1
         c = _Cluster(tokens, tree._next_id, size)
         tree._put_cluster(c)
         tree._insert_path(c)
     return tree
+
+
+def template_id_matcher(
+    templates: list[tuple[str, int]], config: DrainConfig | None = None
+) -> Callable[[str], str | None]:
+    """The frozen match of every pass: a memoized line -> template id
+    function (null when the line matches no template) over
+    :func:`build_matcher`'s tree. Build it once per Python task from the
+    broadcast ``(templates, config)``; the memo lives as long as the task
+    (log lines repeat heavily)."""
+    tree = build_matcher(templates, config)
+    memo: dict[str, str | None] = {}
+
+    def tid_of(line: str) -> str | None:
+        hit = memo.get(line)
+        if hit is None and line not in memo:
+            t = tree.match_line(line)
+            hit = memo[line] = template_id_of(t) if t is not None else None
+        return hit
+
+    return tid_of
 
 
 def match_templates(
@@ -210,31 +231,14 @@ def match_templates(
     only the 16-char id crosses the Arrow boundary per row).
     """
     cfg = config or DrainConfig()
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((templates, cfg))
+    bc = df.sparkSession.sparkContext.broadcast((templates, cfg))
 
     @F.pandas_udf(T.StringType())
-    def _match_id(series: pd.Series) -> pd.Series:
-        # build the matcher once per python worker, not per Arrow batch;
-        # the memo cache survives batches too (log lines repeat heavily)
-        state = _match_id.__dict__
-        if "tree" not in state:
-            state["tree"] = build_matcher(bc.value[0], bc.value[1])
-            state["cache"] = {}
-        tree = state["tree"]
-        cache: dict[str, str | None] = state["cache"]
-
-        def one(line):
-            if not isinstance(line, str):
-                return None
-            hit = cache.get(line)
-            if hit is None and line not in cache:
-                t = tree.match_line(line)
-                hit = template_id_of(t) if t is not None else None
-                cache[line] = hit
-            return hit
-
-        return series.map(one)
+    def _match_id(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        # one matcher (and memo) per task, shared by all its Arrow batches
+        tid_of = template_id_matcher(*bc.value)
+        for lines in batches:
+            yield lines.map(tid_of, na_action="ignore")
 
     out = df.withColumn(id_col, _match_id(F.col(column)))
     if template_col is not None:
@@ -247,27 +251,6 @@ def match_templates(
         )
         out = out.withColumn(template_col, id_to_template[F.col(id_col)])
     return out
-
-
-def match_templates_by_join(
-    df: DataFrame,
-    column: str = "logline",
-    templates: list[tuple[str, int]] | None = None,
-    config: DrainConfig | None = None,
-    id_col: str = "template_id",
-) -> DataFrame:
-    """Match via global dedup + equi-join: each DISTINCT line crosses Python
-    exactly once; the fact table gets its template_id from a JVM shuffle join.
-
-    Per-worker memo caches (match_templates) redo work proportional to
-    worker count — with W workers each must match its own copy of the hot
-    lines. Here total Python work is exactly |distinct lines| regardless of
-    parallelism, so the stage scales with executors; the join is plain
-    hash-shuffle relational work Spark already scales.
-    """
-    distinct = df.select(column).distinct()
-    matched = match_templates(distinct, column, templates, config, template_col=None, id_col=id_col)
-    return df.join(matched, column, "left")
 
 
 def parse_df(

@@ -27,17 +27,19 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+import pandas as pd
 import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from logai_spark.operators.enrich import enrich
 from logai_spark.operators.features import counter_vector
 from logai_spark.operators.route import commit_lineage, hot_key_buckets, route_to_sinks
-from logai_spark.parse.distributed import mine_templates
+from logai_spark.parse.distributed import mine_templates, template_id_matcher
 from logai_spark.parse.drain import DrainConfig, template_id_of
-from logai_spark.sources.webpages import extract_text_udf
+from logai_spark.sources.webpages import extract_text_reference, extract_text_sniffed
 
 LANG_DIM = [
     ("en", "English", "latin"),
@@ -56,11 +58,22 @@ class PipelineConfig:
     window: str = "1 hour"
     sample_fraction_for_mining: float = 1.0  # at 100TB you mine on a sample
     # WHATWG charset sniff (BOM > meta prescan > utf-8 trial > cp1252) in
-    # front of html->text extraction. Off by default: the pinned per-url
-    # byte-identity invariant is defined against the utf-8 reference
-    # extractor, and sniffed output is byte-identical on valid-UTF-8 pages
-    # anyway — enable on corpora with mixed encodings (real Common Crawl).
+    # front of html->text extraction, in the mining pass and the match pass
+    # alike (both split pages through page_lines). Off by default: the
+    # pinned per-url byte-identity invariant is defined against the utf-8
+    # reference extractor, and sniffed output is byte-identical on
+    # valid-UTF-8 pages anyway — enable on corpora with mixed encodings
+    # (real Common Crawl).
     charset_sniff: bool = False
+
+
+def page_lines(html: bytes, charset_sniff: bool = False) -> list[str]:
+    """Stages 1+2 for one page: html -> text -> its non-blank lines. The one
+    html -> lines step of both passes (the mining input and the fused
+    extract+match stage), so the dictionary is mined from the lines it
+    later matches."""
+    text = (extract_text_sniffed if charset_sniff else extract_text_reference)(html)
+    return [ln for ln in text.split("\n") if ln]
 
 
 def extract_parse(
@@ -79,16 +92,6 @@ def extract_parse(
     once: each Arrow batch of pages is extracted, line-split, and matched in
     the same Python worker; only final line-level rows return to the JVM.
     """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from logai_spark.parse.distributed import build_matcher
-    from logai_spark.sources.webpages import (
-        extract_text_reference,
-        extract_text_sniffed,
-    )
-
-    extractor = extract_text_sniffed if charset_sniff else extract_text_reference
     cfg = config or DrainConfig()
     bc = pages.sparkSession.sparkContext.broadcast((templates, cfg))
     # one output row per PAGE with line/template-id arrays: url/ts/lang cross
@@ -105,24 +108,10 @@ def extract_parse(
     )
 
     def _fused(batches):
-        tree = build_matcher(bc.value[0], bc.value[1])
-        memo: dict[str, str | None] = {}
-
-        def tid_of(line: str):
-            hit = memo.get(line)
-            if hit is None and line not in memo:
-                t = tree.match_line(line)
-                hit = template_id_of(t) if t is not None else None
-                memo[line] = hit
-            return hit
-
+        tid_of = template_id_matcher(*bc.value)
         for pdf in batches:
-            lines_col, tids_col = [], []
-            for html in pdf["html"]:
-                text = extractor(html)
-                lines = [ln for ln in text.split("\n") if ln]
-                lines_col.append(lines)
-                tids_col.append([tid_of(ln) for ln in lines])
+            lines_col = [page_lines(html, charset_sniff) for html in pdf["html"]]
+            tids_col = [[tid_of(ln) for ln in lines] for lines in lines_col]
             yield pd.DataFrame(
                 {
                     "url": pdf["url"],
@@ -149,20 +138,21 @@ def extract_parse(
     )
 
 
-def pages_to_lines(pages: DataFrame) -> DataFrame:
-    """Stages 1+2: html -> text (Arrow UDF) -> one row per text line.
+def pages_to_lines(pages: DataFrame, charset_sniff: bool = False) -> DataFrame:
+    """Stages 1+2: one row per text line of each page, split by
+    :func:`page_lines` in one Arrow UDF — the mining pass's input, line for
+    line what the fused stage of :func:`extract_parse` matches.
 
     The text is re-derived from html, so the byte-identity invariant is
     exercised in the mining pass too.
     """
-    text = extract_text_udf()(F.col("html"))
-    lines = pages.select(
-        "url",
-        "warc_ts",
-        "lang",
-        F.posexplode(F.split(text, "\n")).alias("seq", "logline"),
+    @F.pandas_udf(T.ArrayType(T.StringType()))
+    def _lines(html: pd.Series) -> pd.Series:
+        return html.map(lambda h: page_lines(h, charset_sniff))
+
+    return pages.select(
+        "url", "warc_ts", "lang", F.posexplode(_lines("html")).alias("seq", "logline")
     )
-    return lines.filter(F.length("logline") > 0)
 
 
 def lang_dimension(spark: SparkSession) -> DataFrame:
@@ -273,7 +263,7 @@ def run_pipeline(
             < int(cfg.sample_fraction_for_mining * 10000)
         )
     templates, mine_stats = mine_templates(
-        pages_to_lines(mine_pages), "logline", cfg.drain, return_stats=True
+        pages_to_lines(mine_pages, cfg.charset_sniff), "logline", cfg.drain, return_stats=True
     )
     manifest, agg_rows = parse_route_aggregate(
         spark,

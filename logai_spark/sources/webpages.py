@@ -19,7 +19,6 @@ import html as _html
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 WEBPAGE_SCHEMA = T.StructType(
@@ -68,7 +67,7 @@ def _gen_line(seed: int, doc: int, i: int, line_pool: int | None = None) -> str:
         # high-duplication regime: draw the line from a fixed pool of
         # `line_pool` distinct lines (duplication factor ~= total/pool):
         # the corpus on which the fused match's memo hits, used by the
-        # fused-vs-join match-equivalence test
+        # fused-vs-UDF match-equivalence test
         r = _h(seed, f"pline:{r % line_pool}")
     # skew: ~35% of lines hit template 0, rest uniform
     t = 0 if r % 100 < 35 else 1 + (r >> 8) % (len(_LINE_TEMPLATES) - 1)
@@ -161,15 +160,6 @@ def extract_text_sniffed(html_bytes: bytes) -> str:
     return _strip_html(decode_html(html_bytes))
 
 
-def extract_text_udf():
-    """Arrow-vectorized extractor (no per-row Python UDF; Arrow batches)."""
-    @F.pandas_udf(T.StringType())
-    def _extract(html: pd.Series) -> pd.Series:
-        return html.map(extract_text_reference)
-
-    return _extract
-
-
 def synth_webpages(
     spark: SparkSession,
     n_docs: int,
@@ -181,7 +171,8 @@ def synth_webpages(
 
     The ``text`` column is filled by the reference extractor over the
     generated html, so `text == extract(html)` holds by construction (the
-    extraction invariant test re-derives it through the Spark UDF path).
+    extraction invariant test re-derives it per url from the lines of
+    ``pipeline.pages_to_lines``, the pipeline's own Spark path).
     """
     ids = spark.range(0, n_docs, numPartitions=partitions or spark.sparkContext.defaultParallelism)
 

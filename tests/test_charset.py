@@ -160,3 +160,66 @@ def test_pipeline_charset_sniff_flag(spark, tmp_path):
     assert sniff["lines"] == base["lines"]
     assert sniff["templates"] == base["templates"]
     assert sniff["agg_rows"] == base["agg_rows"]
+
+
+def _cp1252_pages(spark, n):
+    """``n`` windows-1252 pages (no meta, no BOM: the sniff falls back to
+    cp1252) that share one literal non-ASCII line."""
+    import datetime
+
+    from logai_spark.sources.webpages import WEBPAGE_SCHEMA
+
+    ts = datetime.datetime(2024, 1, 1)
+    rows = []
+    for i in range(n):
+        html = f"<html><body><p>“smart” café order</p><p>plain line {i}</p></body></html>"
+        rows.append((f"https://cp1252.example/{i}", ts, html.encode("cp1252"), "", "en"))
+    return spark.createDataFrame(rows, WEBPAGE_SCHEMA)
+
+
+def test_pipeline_charset_sniff_mines_sniffed_text(spark, tmp_path):
+    """With the sniff on, mining sees the sniffed lines too: the dictionary
+    holds the decoded text, and every line matches a template."""
+    from logai_spark.operators.route import NULL_SINK
+    from logai_spark.pipeline import PipelineConfig, run_pipeline
+
+    out = run_pipeline(
+        spark, _cp1252_pages(spark, 6), str(tmp_path / "o"), PipelineConfig(charset_sniff=True)
+    )
+    templates = [t for t, _ in out["templates_list"]]
+    assert "“smart” café order" in templates
+    assert all("�" not in t for t in templates), templates
+    assert NULL_SINK not in out["manifest"]["sinks"], out["manifest"]["sinks"]
+    assert out["lines"] == 12
+
+
+@pytest.mark.parametrize("sniff", [False, True])
+def test_mining_and_match_see_the_same_lines(spark, sniff):
+    """The sampled mining input and the fused extract+match stage split a
+    page into the same lines, per url, whichever extractor the sniff flag
+    picks: generated utf-8 pages, cp1252 pages, an empty page and a page
+    holding only a script."""
+    import collections
+    import datetime
+
+    from logai_spark.pipeline import extract_parse, pages_to_lines
+    from logai_spark.sources.webpages import WEBPAGE_SCHEMA, synth_webpages
+
+    ts = datetime.datetime(2024, 1, 1)
+    edge = spark.createDataFrame(
+        [
+            ("https://edge.example/empty", ts, b"", "", "en"),
+            ("https://edge.example/script", ts, b"<script>var x = 1;</script>", "", "en"),
+        ],
+        WEBPAGE_SCHEMA,
+    )
+    pages = synth_webpages(spark, 40).unionByName(_cp1252_pages(spark, 5)).unionByName(edge)
+
+    def per_url(df):
+        return collections.Counter(map(tuple, df.select("url", "logline").collect()))
+
+    mined = per_url(pages_to_lines(pages, charset_sniff=sniff))
+    matched = per_url(extract_parse(pages, [], charset_sniff=sniff))
+    assert mined == matched
+    assert {u for u, _ in mined} >= {f"https://cp1252.example/{i}" for i in range(5)}
+    assert not any(u.startswith("https://edge.example/") for u, _ in mined)

@@ -3,9 +3,9 @@ input_hint) and generator determinism."""
 
 from pyspark.sql import functions as F
 
+from logai_spark.pipeline import pages_to_lines
 from logai_spark.sources.webpages import (
     extract_text_reference,
-    extract_text_udf,
     make_page,
     synth_webpages,
 )
@@ -25,9 +25,18 @@ def test_extractor_reference_behavior():
 
 
 def test_udf_byte_identity_per_url(spark):
+    # re-derive each url's text from the pipeline's own line rows: its
+    # lines in seq order, joined with "\n" (a page with no line has "")
     pages = synth_webpages(spark, 300, seed=7)
-    recomputed = pages.withColumn("text2", extract_text_udf()(F.col("html")))
-    assert recomputed.filter(F.col("text") != F.col("text2")).count() == 0
+    rejoined = (
+        pages_to_lines(pages)
+        .groupBy("url")
+        .agg(F.array_sort(F.collect_list(F.struct("seq", "logline"))).alias("_l"))
+        .select("url", F.concat_ws("\n", F.col("_l.logline")).alias("text2"))
+    )
+    recomputed = pages.join(rejoined, "url", "left")
+    assert recomputed.count() == 300
+    assert recomputed.filter(F.col("text") != F.coalesce("text2", F.lit(""))).count() == 0
 
 
 def test_table_stable_across_partitionings(spark):

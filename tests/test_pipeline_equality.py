@@ -109,13 +109,13 @@ def test_windowed_aggregate_equality(spark, pipeline_out, oracle):
     )
 
 
-def test_fused_match_equals_join_match(spark):
-    """The fused extract+match stage (per-worker memo) and the join-based
-    match (global distinct-line match + equi-join, the drain_parse oracle's
-    plan) give identical (url, seq, logline, template_id) rows, on a
+def test_fused_match_equals_udf_match(spark):
+    """The fused extract+match stage and the standalone match UDF
+    (``match_templates``, the drain_parse oracle's plan, over
+    ``pages_to_lines``) give identical (url, seq, logline, template_id) rows, on a
     mostly-distinct corpus and on a 40-line pool, the high-duplication
     corpus where the memo hits."""
-    from logai_spark.parse.distributed import match_templates_by_join, mine_templates
+    from logai_spark.parse.distributed import match_templates, mine_templates
     from logai_spark.pipeline import extract_parse, pages_to_lines
 
     cols = ["url", "seq", "logline", "template_id"]
@@ -125,12 +125,12 @@ def test_fused_match_equals_join_match(spark):
         # the pooled corpus repeats each line ~150x, so the memo mostly hits
         assert (stats["duplication"] > 20.0) == (line_pool is not None)
         fused = extract_parse(pages, templates).select(*cols)
-        joined = match_templates_by_join(
+        matched = match_templates(
             pages_to_lines(pages), "logline", templates
         ).select(*cols)
-        assert fused.count() == joined.count() > 0, line_pool
-        assert fused.exceptAll(joined).count() == 0, line_pool
-        assert joined.exceptAll(fused).count() == 0, line_pool
+        assert fused.count() == matched.count() > 0, line_pool
+        assert fused.exceptAll(matched).count() == 0, line_pool
+        assert matched.exceptAll(fused).count() == 0, line_pool
 
 
 def test_mine_stats_duplication(spark):
