@@ -52,10 +52,7 @@ from logai_spark.functions.textops import (
     repetition_stats,
 )
 from logai_spark.operators.features import pack_sequences
-from logai_spark.operators.route import manifest_of, write_manifest
-
-# the ledger's commit record: the config hash a resume must match
-LEDGER_META = "_ledger_meta.json"
+from logai_spark.operators.route import commit_lineage, committed, write_manifest
 
 # The flag ledger, declared once. (keep column, manifest count key) in cut
 # order: a stage that runs writes its keep column and a stage that did not
@@ -327,7 +324,8 @@ def run_curation(
         lf = line_filter(
             docs,
             text_col=c.text_col,
-            id_col=c.id_col,
+            # keep the paragraphs that paragraph dedup splits on
+            paragraph_sep=c.paragraph_sep if c.paragraph_dedup else None,
             min_sentences=c.line_filter_min_sentences,
         )
         docs = lf.select(
@@ -424,10 +422,11 @@ def run_curation(
     # lineage N times (the difference between 2 and ~6 full passes at
     # 100 TB). Only ids and booleans are persisted; text never is.
     #
-    # The finished ledger is CHECKPOINTED to <output>/_ledger parquet with
-    # a config-hash sidecar: with cfg.resume, a rerun whose stage config
-    # matches skips stages 1-4 (every expensive corpus pass — dedup, LSH,
-    # repetition, quality quantiles) and goes straight to scrub/pack/write
+    # The finished ledger is CHECKPOINTED to <output>/_ledger parquet and
+    # committed as the stage "curate.ledger <config hash>": with
+    # cfg.resume, a rerun whose stage config matches skips stages 1-4
+    # (every expensive corpus pass — dedup, LSH, repetition, quality
+    # quantiles) and goes straight to scrub/pack/write
     # — the curation dual of pipeline.py's per-partition lineage resume
     # (north-rule "resumable from checkpoint"). pack_budget / n_shards are
     # excluded from the hash: they only shape post-ledger stages. Stage-0
@@ -435,7 +434,6 @@ def run_curation(
     # only ids/flags are); it is deterministic, so the output is identical.
     # ------------------------------------------------------------------
     ledger_dir = os.path.join(output, "_ledger")
-    meta_path = os.path.join(output, LEDGER_META)
     stage_cfg = {
         k: v for k, v in asdict(c).items()
         if k not in (
@@ -469,11 +467,8 @@ def run_curation(
             {"cfg": stage_cfg, "input": input_fp}, sort_keys=True, default=str
         ).encode()
     ).hexdigest()
-    resumed = (
-        c.resume
-        and os.path.exists(os.path.join(ledger_dir, "_SUCCESS"))
-        and (manifest_of(output, LEDGER_META) or {}).get("config_hash") == cfg_hash
-    )
+    ledger_stage = f"curate.ledger {cfg_hash}"
+    resumed = c.resume and committed(ledger_dir, ledger_stage)
     if not resumed:
         # 1. exact dedup: keeper = min id per identical text. hash_key
         #    shuffles 16-byte digests, not document bodies
@@ -638,15 +633,12 @@ def run_curation(
         # checkpoint the finished ledger (ids + booleans + quality — tiny
         # relative to the corpus); downstream consumers read the frozen
         # artifact, not live lineage, and a killed run resumes from here
-        # without repeating any corpus pass. Invalidate the meta BEFORE
-        # overwriting the ledger: a crash between the two writes must
-        # leave a ledger that no meta validates, never a stale meta that
-        # validates the wrong ledger
-        if os.path.exists(meta_path):
-            os.remove(meta_path)
+        # without repeating any corpus pass. The overwrite deletes the old
+        # ledger and its manifest first, so a crash before the commit
+        # leaves a ledger that no manifest validates
         flags.write.mode("overwrite").parquet(ledger_dir)
         base.unpersist()
-        write_manifest(output, {"config_hash": cfg_hash}, LEDGER_META)
+        commit_lineage(spark, ledger_dir, ledger_stage)
     try:
         return _finish_curation(
             spark, docs, spark.read.parquet(ledger_dir), output, c, resumed,

@@ -377,7 +377,7 @@ C4_POLICY_PHRASES = [
 def line_filter(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
+    paragraph_sep: str | None = None,
     min_line_words: int = 3,
     min_sentences: int = 5,
     policy_phrases: list[str] | None = None,
@@ -391,7 +391,9 @@ def line_filter(
     ``min_sentences`` sentences.
 
     Adds to every input row: ``clean_text`` (kept lines joined with
-    newlines), ``n_lines`` / ``n_kept_lines``, ``n_sentences`` (sentence
+    newlines; with ``paragraph_sep``, joined within each paragraph and the
+    non-empty paragraphs rejoined with it, so a later paragraph-level stage
+    still sees them), ``n_lines`` / ``n_kept_lines``, ``n_sentences`` (sentence
     count of the retained text, SENTENCE_RE semantics shared with
     span_dedup), the doc-level booleans ``has_lorem_ipsum`` /
     ``has_brace`` / ``rule_min_sentences``, and ``c4_keep`` = the AND of
@@ -405,10 +407,10 @@ def line_filter(
     """
     phrases = C4_POLICY_PHRASES if policy_phrases is None else policy_phrases
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    lines = F.filter(
-        F.transform(F.split(txt, r"\n"), lambda l: F.trim(l)),
-        lambda l: F.length(l) > 0,
-    )
+
+    def _lines(t: Column) -> Column:
+        trimmed = F.transform(F.split(t, r"\n"), lambda l: F.trim(l))
+        return F.filter(trimmed, lambda l: F.length(l) > 0)
 
     def _line_ok(l: Column) -> Column:
         low = F.lower(l)
@@ -421,8 +423,16 @@ def line_filter(
             ok = ok & ~low.contains(p)
         return ok
 
-    kept = F.filter(lines, _line_ok)
-    clean = F.array_join(kept, "\n")
+    if paragraph_sep is None:
+        lines = _lines(txt)
+        kept = F.filter(lines, _line_ok)
+        clean = F.array_join(kept, "\n")
+    else:
+        para_lines = F.transform(F.split(txt, paragraph_sep), _lines)
+        para_kept = F.transform(para_lines, lambda a: F.filter(a, _line_ok))
+        lines, kept = F.flatten(para_lines), F.flatten(para_kept)
+        paras = F.transform(para_kept, lambda a: F.array_join(a, "\n"))
+        clean = F.array_join(F.filter(paras, lambda p: F.length(p) > 0), paragraph_sep)
     n_sentences = F.size(
         F.filter(
             F.transform(

@@ -299,13 +299,19 @@ def write_manifest(path: str, manifest: dict, name: str = MANIFEST) -> None:
     _write_atomic(os.path.join(path, name), payload)
 
 
-def manifest_of(path: str, name: str = MANIFEST) -> dict | None:
-    """The one manifest reader: ``path/name`` parsed, or None if absent."""
-    p = os.path.join(path, name)
+def manifest_of(path: str) -> dict | None:
+    """The one manifest reader: ``path``'s manifest, or None if absent."""
+    p = os.path.join(path, MANIFEST)
     if os.path.exists(p):
         with open(p) as f:
             return json.load(f)
     return None
+
+
+def committed(path: str, stage: str) -> bool:
+    """Whether ``path`` holds an output that :func:`commit_lineage`
+    committed as ``stage``: the one resume test of every entry point."""
+    return (manifest_of(path) or {}).get("stage") == stage
 
 
 def read_sink(spark: SparkSession, path: str, template_id: str | None = None) -> DataFrame:
@@ -317,9 +323,7 @@ def read_sink(spark: SparkSession, path: str, template_id: str | None = None) ->
     return df
 
 
-def checkpoint(
-    df: DataFrame, path: str, stage: str, resume: bool = True
-) -> DataFrame:
+def checkpoint(df: DataFrame, path: str, stage: str) -> DataFrame:
     """Stage checkpoint: write parquet + manifest unless a completed manifest
     already exists, then read back (cuts lineage, enables mid-DAG resume).
     Spark analog of the reference's write-CSV-then-reload-if-present stages
@@ -333,11 +337,9 @@ def checkpoint(
     scalar totals, staying bounded at any file count.
     """
     spark = df.sparkSession
-    m = manifest_of(path)
-    if resume and m is not None and m.get("stage") == stage:
-        return spark.read.parquet(path)
-    df.write.mode("overwrite").parquet(path)
-    commit_lineage(spark, path, stage)
+    if not committed(path, stage):
+        df.write.mode("overwrite").parquet(path)
+        commit_lineage(spark, path, stage)
     return spark.read.parquet(path)
 
 

@@ -164,21 +164,19 @@ def lang_dimension(spark: SparkSession) -> DataFrame:
 
 
 def verify_routed_write(
-    spark: SparkSession,
-    routed_path: str,
-    expected: dict,
-    partition_col: str = "template_id",
+    spark: SparkSession, routed_path: str, expected: dict, stage: str = "route"
 ) -> dict:
     """Write-audit gate: the expected per-sink counts roll up from the
     in-memory aggregate — confirm the parquet actually written agrees, sink
     by sink, before the manifest lands. A partial or faulty sink write must
-    fail HERE, not get certified by its own manifest. Returns the manifest.
+    fail HERE, not get certified by its own manifest, committed as
+    ``stage``. Returns the manifest.
 
     The written counts come from route.commit_lineage's lineage pass over
     the parquet footers (route.footer_lineage_scan): metadata reads on the
     driver, never a row scan. Below the pass's driver threshold its one
     Spark job is the ``_lineage_files`` sidecar write."""
-    return commit_lineage(spark, routed_path, "route", partition_col, expected)
+    return commit_lineage(spark, routed_path, stage, "template_id", expected)
 
 
 def parse_route_aggregate(
@@ -188,11 +186,13 @@ def parse_route_aggregate(
     routed_path: str,
     agg_path: str,
     cfg: PipelineConfig,
+    stage: str = "route",
 ) -> tuple[dict, int]:
     """The post-mining tail: extract+match ``pages`` against the frozen
     ``templates``, enrich, route to per-template sinks at ``routed_path``,
     write the windowed aggregate to ``agg_path`` and certify the routed
-    write against it. Returns (routed manifest, aggregate rows).
+    write against it, committed as ``stage``. Returns (routed manifest,
+    aggregate rows).
 
     Unmatched lines keep a null template id and land in the
     :data:`~logai_spark.operators.route.NULL_SINK` sink."""
@@ -234,7 +234,7 @@ def parse_route_aggregate(
     )
     agg.unpersist()
     manifest = verify_routed_write(
-        spark, routed_path, {r["template_id"]: r["_rows"] for r in per_sink}
+        spark, routed_path, {r["template_id"]: r["_rows"] for r in per_sink}, stage
     )
     enriched.unpersist()
     return manifest, int(sum(r["_agg_rows"] for r in per_sink))

@@ -29,7 +29,7 @@ from logai_spark.functions.webgraph import (
     domain_pagerank,
     link_edges,
 )
-from logai_spark.operators.route import write_manifest
+from logai_spark.operators.route import commit_lineage, write_manifest
 
 
 def run_webgraph_job(
@@ -44,37 +44,39 @@ def run_webgraph_job(
     top_anchors: int = 5,
 ) -> dict:
     """Write edges/, domains/ (pagerank + harmonic), anchors/ under
-    ``output`` plus _webgraph_manifest.json; returns the manifest dict.
-    ``html_col`` may be binary (cast to utf-8 string) or string."""
+    ``output``, each committed by :func:`commit_lineage` as its write
+    lands, plus _webgraph_manifest.json, whose counts are the commits'
+    footer totals; returns the manifest dict. ``html_col`` may be binary
+    (cast to utf-8 string) or string."""
     src = pages.select(
         F.regexp_extract(F.col(url_col), DOMAIN_RE, 1).alias("source"),
         F.col(html_col).cast("string").alias("html"),
     ).filter(F.col("source") != "")
 
-    edges_path = os.path.join(output, "edges")
-    link_edges(src, html_col="html", src_domain_col="source").write.mode(
-        "overwrite"
-    ).parquet(edges_path)
-    edges = spark.read.parquet(edges_path)
+    def sink(df: DataFrame, name: str) -> int:
+        """Write ``df`` to ``output/name``, commit it, return its rows."""
+        path = os.path.join(output, name)
+        df.write.mode("overwrite").parquet(path)
+        return commit_lineage(spark, path, f"webgraph.{name}")["total_rows"]
 
+    n_edges = sink(link_edges(src, html_col="html", src_domain_col="source"), "edges")
+    edges = spark.read.parquet(os.path.join(output, "edges"))
     pr = domain_pagerank(edges, iters=pr_iters)
     hb = hyperball_harmonic(edges, p=hb_p, iters=hb_iters)
-    domains_path = os.path.join(output, "domains")
-    pr.join(hb, "domain", "full_outer").select(
-        "domain",
-        F.coalesce("rank", F.lit(0.0)).alias("pagerank"),
-        F.coalesce("harmonic", F.lit(0.0)).alias("harmonic"),
-    ).write.mode("overwrite").parquet(domains_path)
-
-    anchors_path = os.path.join(output, "anchors")
-    anchor_text(src, html_col="html", top_k=top_anchors).write.mode(
-        "overwrite"
-    ).parquet(anchors_path)
+    n_domains = sink(
+        pr.join(hb, "domain", "full_outer").select(
+            "domain",
+            F.coalesce("rank", F.lit(0.0)).alias("pagerank"),
+            F.coalesce("harmonic", F.lit(0.0)).alias("harmonic"),
+        ),
+        "domains",
+    )
+    n_anchor_rows = sink(anchor_text(src, html_col="html", top_k=top_anchors), "anchors")
 
     manifest = {
-        "n_edges": spark.read.parquet(edges_path).count(),
-        "n_domains": spark.read.parquet(domains_path).count(),
-        "n_anchor_rows": spark.read.parquet(anchors_path).count(),
+        "n_edges": n_edges,
+        "n_domains": n_domains,
+        "n_anchor_rows": n_anchor_rows,
         "pr_iters": pr_iters,
         "hb_iters": hb_iters,
         "hb_p": hb_p,

@@ -13,10 +13,13 @@ workflow on file drops). Design, chosen for exactly-once at 10^12-doc scale:
 - **Idempotent batch commits instead of streaming state.** Each micro-batch
   writes straight into its own ``batch_id=N`` directories with a plain
   overwrite, so a replayed batch (failure before the checkpoint advanced)
-  REPLACES its own half-written output instead of appending duplicates; a
-  per-batch commit record (written last, after both sinks passed the
-  audit) marks the batch committed and short-circuits fully-committed
-  replays. Output is exactly-once without a transactional sink.
+  REPLACES its own half-written output instead of appending duplicates.
+  The batch's commit record is the routed write's own lineage manifest,
+  ``routed/batch_id=N/_lineage_manifest.json``, with the stage
+  ``stream <input fingerprint>``: it lands last, after both sinks were
+  written and the routed write passed its audit, and a replay of a batch
+  committed under the same stage is skipped. Output is exactly-once
+  without a transactional sink.
 - **Associative partial aggregates instead of watermarked state.** The
   windowed counter vectors are summable, so each batch writes its PARTIAL
   per-window counts and :func:`read_streaming_agg` re-sums at read time.
@@ -35,19 +38,19 @@ workflow on file drops). Design, chosen for exactly-once at 10^12-doc scale:
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from logai_spark.operators.route import manifest_of, write_manifest
+from logai_spark.operators.route import MANIFEST, committed, manifest_of
 from logai_spark.pipeline import PipelineConfig, parse_route_aggregate
-
-BATCH_MANIFEST_DIR = "stream_manifests"
 
 
 def _batch_manifest_path(out_dir: str, batch_id: int) -> str:
-    return os.path.join(out_dir, BATCH_MANIFEST_DIR, f"batch_{int(batch_id)}.json")
+    """The commit record of batch ``batch_id``: its routed manifest."""
+    return os.path.join(out_dir, "routed", f"batch_id={int(batch_id)}", MANIFEST)
 
 
 def _batch_fingerprint(batch_df: DataFrame) -> str | None:
@@ -58,8 +61,8 @@ def _batch_fingerprint(batch_df: DataFrame) -> str | None:
     DataFrame-level ``inputFiles()`` is empty inside ``foreachBatch``).
     Needed because batch ids alone are not stable across checkpoint loss: a
     restarted stream re-bundles ALL unprocessed files into a fresh batch 0,
-    so a committed ``batch_0.json`` from the old lineage must NOT suppress a
-    batch 0 that now carries new files. Non-file sources return None (no
+    so a committed batch 0 from the old lineage must NOT suppress a batch 0
+    that now carries new files. Non-file sources return None (no
     cheap identity; the short-circuit then degrades to batch-id-only, the
     pre-fingerprint behavior)."""
     import hashlib
@@ -96,37 +99,27 @@ def run_streaming_pipeline(
     cfg = config or PipelineConfig()
     routed_path = os.path.join(out_dir, "routed")
     agg_path = os.path.join(out_dir, "agg_parts")
-    man_dir = os.path.join(out_dir, BATCH_MANIFEST_DIR)
-    os.makedirs(man_dir, exist_ok=True)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        man_name = os.path.basename(_batch_manifest_path(out_dir, batch_id))
-        fingerprint = _batch_fingerprint(batch_df)
-        committed = manifest_of(man_dir, man_name)
-        if committed is not None:
-            # replay of a fully-committed batch (manifest is written LAST):
-            # skip ONLY if the batch carries the same input as the committed
-            # one — after checkpoint loss the re-bundled batch 0 may include
-            # files the old batch 0 never saw, and skipping would silently
-            # drop them. A mismatch falls through to reprocess: the overwrite
-            # replaces the batch's own directories and the manifest is
-            # rewritten, so the rerun is exactly-once too.
-            if committed.get("input_fingerprint") == fingerprint:
-                return
         part = f"batch_id={int(batch_id)}"
-        routed, _ = parse_route_aggregate(
+        # the stage carries the input identity: a replay is skipped ONLY if
+        # it carries the same input as the committed batch — after
+        # checkpoint loss the re-bundled batch 0 may include files the old
+        # batch 0 never saw, and skipping would silently drop them. A
+        # mismatch reprocesses: the overwrite replaces the batch's own
+        # directories, manifest included, so the rerun is exactly-once too.
+        stage = f"stream {_batch_fingerprint(batch_df)}"
+        if committed(os.path.join(routed_path, part), stage):
+            return
+        parse_route_aggregate(
             batch_df.sparkSession,
             batch_df,
             templates,
             os.path.join(routed_path, part),
             os.path.join(agg_path, part),
             cfg,
+            stage,
         )
-        # the commit record: written only after BOTH sinks landed and the
-        # routed write passed its audit
-        manifest = {"batch_id": int(batch_id), "input_fingerprint": fingerprint}
-        manifest.update({k: routed[k] for k in ("sinks", "total_rows", "n_sinks")})
-        write_manifest(man_dir, manifest, man_name)
 
     writer = (
         pages_stream.writeStream.foreachBatch(_process)
@@ -158,18 +151,17 @@ def read_streaming_agg(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def streaming_manifest_totals(out_dir: str) -> dict:
-    """Roll the per-batch commit manifests into pipeline-level lineage:
+    """Roll the per-batch routed manifests into pipeline-level lineage:
     per-sink totals + committed batch ids (what the batch pipeline's single
-    manifest records, accumulated across the stream's life)."""
-    man_dir = os.path.join(out_dir, BATCH_MANIFEST_DIR)
+    manifest records, accumulated across the stream's life). A batch
+    directory without a manifest is uncommitted and counts for nothing."""
     sinks: dict[str, int] = {}
     batches: list[int] = []
-    for name in sorted(os.listdir(man_dir)):
-        # batch_N.json only: a batch_N.json.tmp is a commit that never landed
-        if not (name.startswith("batch_") and name.endswith(".json")):
+    for batch_dir in glob.glob(os.path.join(out_dir, "routed", "batch_id=*")):
+        m = manifest_of(batch_dir)
+        if m is None:
             continue
-        m = manifest_of(man_dir, name)
-        batches.append(m["batch_id"])
+        batches.append(int(batch_dir.rsplit("=", 1)[1]))
         for k, n in m["sinks"].items():
             sinks[k] = sinks.get(k, 0) + int(n)
     return {

@@ -3,8 +3,10 @@
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from logai_spark import curate
 from logai_spark.curate import CurationConfig, run_curation
 
 
@@ -190,6 +192,34 @@ def test_curation_resume_from_ledger(spark, tmp_path):
         CurationConfig(keep_frac=0.5, pack_budget=60, resume=True),
     )
     assert m4["resumed_from_ledger"] is False
+
+
+def _curated_rows(spark, out):
+    return sorted(map(tuple, spark.read.parquet(os.path.join(out, "curated")).collect()))
+
+
+def test_curation_crash_before_ledger_commit_recomputes(spark, tmp_path, monkeypatch):
+    """A run killed after the ledger parquet lands but before its commit
+    leaves a ledger that no manifest validates: the resumed rerun
+    recomputes it and writes what an uninterrupted run writes."""
+    cfg = CurationConfig(keep_frac=0.75, pack_budget=60, resume=True)
+    ref = str(tmp_path / "ref")
+    m_ref = run_curation(spark, _docs(spark), ref, cfg)
+    real = curate.commit_lineage
+
+    def crash(spark_, path, stage, *args, **kwargs):
+        assert os.path.exists(os.path.join(path, "_SUCCESS"))
+        monkeypatch.setattr(curate, "commit_lineage", real)
+        raise RuntimeError("killed before the ledger commit")
+
+    monkeypatch.setattr(curate, "commit_lineage", crash)
+    out = str(tmp_path / "crashed")
+    with pytest.raises(RuntimeError, match="killed before the ledger commit"):
+        run_curation(spark, _docs(spark), out, cfg)
+    m = run_curation(spark, _docs(spark), out, cfg)
+    assert m["resumed_from_ledger"] is False
+    assert m["counts"] == m_ref["counts"]
+    assert _curated_rows(spark, out) == _curated_rows(spark, ref)
 
 
 def test_curation_resume_invalidated_by_input_change(spark, tmp_path):
@@ -608,6 +638,39 @@ def test_curation_paragraph_dedup_stage(spark, tmp_path):
     assert written[0] == f"real article one\n\n{boiler}"  # doc 0 owns it
     assert written[1] == "real article two body text"
     assert written[2] == "real article three\n\nmore three"
+
+
+def test_curation_line_filter_keeps_paragraphs_for_paragraph_dedup(spark, tmp_path):
+    """With the line filter in front, paragraph dedup still sees the
+    paragraphs: the shared paragraph of three docs is removed from the
+    later two, exactly as without the line filter."""
+    shared = "\n".join(
+        f"This shared paragraph line is number {n}." for n in ("one", "two", "three")
+    )
+    rows = [
+        (i, f"Doc {i} has its own first line.\nDoc {i} has its own second line."
+            f"\n\n{shared}", "en", "s0")
+        for i in range(3)
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string"
+    )
+    for line_filter in (False, True):
+        out = str(tmp_path / f"lf_{line_filter}")
+        m = run_curation(
+            spark, docs, out,
+            CurationConfig(
+                keep_frac=1.0, max_top_bigram_frac=1.0, pack_budget=10_000,
+                line_filter=line_filter, paragraph_dedup=True,
+            ),
+        )
+        assert m["counts"]["duplicate_paragraphs_removed"] == 2, line_filter
+        written = {
+            r["doc_id"]: r["text"]
+            for r in spark.read.parquet(os.path.join(out, "curated")).collect()
+        }
+        assert written[0] == rows[0][1]
+        assert written[1] == "Doc 1 has its own first line.\nDoc 1 has its own second line."
 
 
 def test_curation_url_dedup_stage(spark, tmp_path):

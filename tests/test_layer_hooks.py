@@ -43,3 +43,10 @@ def test_curation_calls_the_patched_globals():
     # time, never bound as curate globals a patch would miss
     assert {"quality_score", "dup_clusters"} <= names
     assert not hasattr(curate, "quality_score") and not hasattr(curate, "dup_clusters")
+
+
+def test_webgraph_job_calls_the_patched_globals():
+    from logai_spark.plans import webgraph_job
+
+    names = set(webgraph_job.run_webgraph_job.__code__.co_names)
+    assert {"link_edges", "domain_pagerank", "hyperball_harmonic", "anchor_text"} <= names
